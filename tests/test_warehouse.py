@@ -4,6 +4,13 @@ source fixtures (the whole pipeline must be lossless)."""
 
 from __future__ import annotations
 
+import datetime
+import os
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
+from pyspark.sql import functions as F
+
 from realtime_datawarehouse_spark.plans import warehouse
 from tests.conftest import SF_DIR
 
@@ -37,11 +44,31 @@ def test_layered_pipeline_end_to_end(spark, duck, tmp_path):
     ).fetchone()[0]
     assert cart_ct == exp_cart
 
-    # DWD order_detail is partitioned by dt (partition pruning surface)
-    import os
-
-    parts = [p for p in os.listdir(paths["dwd/order_detail"]) if p.startswith("dt=")]
-    assert len(parts) > 1
+    # DWD order_detail is one unpartitioned table: dt is a column spanning
+    # more dates than the table has data files, and its per-dt amounts
+    # equal DuckDB's straight off the fixtures
+    files = [
+        f for f in os.listdir(paths["dwd/order_detail"]) if f.endswith(".parquet")
+    ]
+    got = {
+        str(r.dt): r.amount
+        for r in spark.read.parquet(paths["dwd/order_detail"])
+        .groupBy("dt")
+        .agg(F.sum("split_original_amount").alias("amount"))
+        .collect()
+    }
+    exp = dict(
+        duck.execute(
+            """SELECT strftime(o.o_orderdate, '%Y-%m-%d'),
+                      sum(l.l_quantity * l.l_extendedprice)
+               FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+               GROUP BY 1"""
+        ).fetchall()
+    )
+    assert len(got) > len(files) >= 1
+    assert got.keys() == exp.keys()
+    for dt, amount in exp.items():
+        assert abs(got[dt] - amount) < 1e-6 * max(1.0, abs(amount)), dt
 
     # ADS: gmv for the busiest day, computed through ALL layers, equals
     # DuckDB computed directly from the raw fixtures
@@ -53,6 +80,67 @@ def test_layered_pipeline_end_to_end(spark, duck, tmp_path):
     ).fetchone()
     got = warehouse.ads_gmv(spark, out, dt)
     assert abs(got - float(exp_gmv)) < 1e-6 * max(1.0, abs(exp_gmv))
+
+
+def test_layer_writes_carry_the_callers_job_group(spark, tmp_path):
+    """Each layer's writes run on their own threads, yet every job they
+    start stays under the caller's job group: at least one job per table."""
+    sc = spark.sparkContext
+    sc.setJobGroup("t", "build_ods")
+    try:
+        warehouse.build_ods(spark, SF_DIR, str(tmp_path / "wh"))
+    finally:  # the session is shared: clear what setJobGroup set
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("t")) >= 3
+
+
+def test_failed_layer_write_raises_after_the_others_land(
+    spark, tmp_path, monkeypatch
+):
+    """A write that fails inside a layer call makes the call raise, and
+    the call returns only once the layer's other writes have finished."""
+    monkeypatch.setattr(
+        warehouse,
+        "_cart_envelopes",
+        lambda spark, sf_dir: spark.range(1).select(
+            F.raise_error(F.lit("planted write failure")).alias("x")
+        ),
+    )
+    out = str(tmp_path / "wh")
+    with pytest.raises(Exception, match="planted write failure"):
+        warehouse.build_ods(spark, SF_DIR, out)
+    for name in ("topic_db_dims", "topic_log"):
+        assert os.path.exists(os.path.join(out, "ods", name, "_SUCCESS"))
+
+
+def test_ads_gmv_reads_its_own_out_dir_and_leaves_no_view(spark, tmp_path):
+    """Concurrent ads_gmv calls over different warehouses each read their
+    own DWS table: no session-global temp view is shared between them."""
+    amounts = {}
+    for i, amount in enumerate((1.5, 2.5)):
+        out = str(tmp_path / f"wh{i}")
+        spark.createDataFrame(
+            [(datetime.date(1995, 3, 1), amount, 1)],
+            "dt date, order_amount double, order_uu_ct long",
+        ).write.parquet(os.path.join(out, "dws", "trade_daily"))
+        amounts[out] = amount
+    outs = list(amounts) * 4
+    with ThreadPoolExecutor(max_workers=len(outs)) as pool:
+        got = list(
+            pool.map(
+                lambda out: warehouse.ads_gmv(spark, out, "1995-03-01"),
+                outs,
+                timeout=300,
+            )
+        )
+    assert got == [amounts[out] for out in outs]
+    assert warehouse.ads_gmv(spark, outs[0], "1995-03-02") == 0.0
+    assert not spark.catalog.tableExists("dws_trade_daily")
 
 
 def test_tpch_refresh_streams_rf1_rf2(spark, duck, tmp_path):
