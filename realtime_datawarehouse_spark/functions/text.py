@@ -164,9 +164,5 @@ def make_segmenter_udf(dictionary=None):
     return segment
 
 
-def stopword_count(tokens: Column) -> Column:
-    return F.size(F.filter(tokens, lambda t: t.isin(*STOPWORDS)))
-
-
 def token_count(col: Column | str) -> Column:
     return F.size(tokenize(col))

@@ -74,7 +74,7 @@ def pagerank(
     iteration re-plans the full accumulated chain, so the per-iteration
     marginal cost GROWS with depth without the cut (measured at sf1:
     0.43 s/iter at depth 4 → 0.97 at depth 8 lazy, flat ~0.6 with
-    checkpoint_every=1 — tools/probe_sf1_r5_graph.py, SCALE.md §19;
+    checkpoint_every=1 — SCALE.md §19;
     same per-round materialization rule as bfs_layers / kcore_peel /
     coreness)."""
     nodes = (

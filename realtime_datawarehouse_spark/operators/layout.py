@@ -5,8 +5,8 @@ the join key (implicit in Flink's keyBy). The batch-warehouse equivalent is
 BUCKETING: write both fact tables bucketed (and sorted) by the join key;
 every subsequent join/aggregation on that key reads co-partitioned data and
 skips the exchange entirely — at 100 TB the single biggest shuffle saving
-available (tested in tests/test_layout.py by asserting the joined plan has
-no Exchange).
+available (tested in tests/test_layout_skew.py by asserting the joined plan
+has no Exchange).
 
 Bucket-count guidance at scale: pick ``buckets ≈ table_size /
 target_partition_size`` (128–512 MB each) and use the SAME count on tables

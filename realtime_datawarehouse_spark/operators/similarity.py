@@ -1184,19 +1184,6 @@ PQ_RERANK = 50                # ADC shortlist size for the rerank stage
 PQ_CODE_PRED_SQL = "vec_id % 5 = 1"  # deterministic codebook sample
 
 
-def _pq_codebook(emb: DataFrame) -> list[list[float]]:
-    """The K codebook base vectors (smallest matching vec_ids), collected —
-    K × DIM floats, the broadcast-dim collect pattern (train_centroids)."""
-    rows = (
-        emb.where(F.col("vec_id") % 5 == 1)
-        .select("vec_id", _as_double(F.col("embedding")).alias("v"))
-        .orderBy("vec_id")
-        .limit(PQ_K)
-        .collect()
-    )
-    return [list(r.v) for r in rows]
-
-
 def _pq_subs(emb: DataFrame) -> DataFrame:
     """(code_id, sub_id, cw): the codebook split into per-subspace
     codewords, as a DataFrame (tiny: M×K rows) for the LUT join."""

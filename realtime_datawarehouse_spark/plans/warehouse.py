@@ -90,13 +90,11 @@ def build_dim(spark: SparkSession, out_dir: str) -> None:
     env = spark.read.parquet(_path(out_dir, "ods", "topic_db_dims"))
     config = config_from_rows(spark, ROUTER_CONFIG_ROWS)
     state = config_router.upsert_state(config_router.route(env, config))
-
-    def sink_table(sink: str) -> DataFrame:
-        return state.where(F.col("sink_table") == sink).select("pk", "data")
-
+    frames = config_router.split_by_sink(
+        state, [row["sink_table"] for row in ROUTER_CONFIG_ROWS]
+    )
     _write_tables(spark, out_dir, "dim", {
-        row["sink_table"]: partial(sink_table, row["sink_table"])
-        for row in ROUTER_CONFIG_ROWS
+        sink: (lambda df=df: df) for sink, df in frames.items()
     })
 
 

@@ -44,6 +44,18 @@ _EXCLUDED_OPT_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
 
+# The runtime-settable SQL confs: set at launch by build_session and on a
+# session we did not build by tune_existing.
+_SQL_CONF = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.optimizer.excludedRules", _EXCLUDED_OPT_RULES),
+)
+
 
 def build_session(
     app_name: str = "realtime_datawarehouse_spark",
@@ -59,18 +71,11 @@ def build_session(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.optimizer.excludedRules", _EXCLUDED_OPT_RULES)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in (*_SQL_CONF, *(extra_conf or {}).items()):
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -78,17 +83,8 @@ def build_session(
 def tune_existing(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of our defaults to a session we did
     not build (the driver hands us one in ``__spark_entry__``)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    for k, v in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.shuffle.partitions", cpus),
-        ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.optimizer.excludedRules", _EXCLUDED_OPT_RULES),
-    ):
+    for k, v in (*_SQL_CONF, ("spark.sql.shuffle.partitions", cpus)):
         try:
             spark.conf.set(k, v)
         except Exception:

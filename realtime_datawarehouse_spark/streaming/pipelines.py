@@ -1571,7 +1571,7 @@ def production_ingest_step(
     a compaction boundary: compaction is pure re-layout, and a replayed
     merge re-derives the same rows whatever the file layout
     (pytest-pinned). Measured bounded-file-count across a 20-ingest
-    history in tools/probe_compaction_cadence.py (SCALE.md §35).
+    history in SCALE.md §35.
 
     MODEL REFRESH POLICIES (rounds 10–11): ``ivf_refresh_every`` +
     ``ivf_max_balance6`` retrain/swap the IVF codebook when list

@@ -59,10 +59,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views so plans can be written in SQL."""
     for n in TABLE_NAMES:
