@@ -14,6 +14,14 @@ scalable). In production each write is a Delta/Iceberg table (or a Kafka
 topic in parity mode) and each arrow is its own Structured Streaming query;
 the operator expressions are identical (streaming/pipelines.py).
 
+Every table a layer reads back is read with its schema as declared here
+(``_SCHEMAS``), never inferred: the paper's DWD jobs "declare fixed
+schemas via DDL over the same topics" (PAPER.md §1.1 item 2), and an
+inferred read costs a schema-discovery Spark job per table, which in a
+warm pass over a few thousand rows takes longer than the read itself.
+Only the source fixtures (``tables.table``) are still inferred, as their
+physical timestamp type varies.
+
 Scale notes: every table is one unpartitioned parquet table. DWD
 ``order_detail`` carries its event date as a ``dt`` column: no consumer
 prunes on it (DWS aggregates the whole table, ADS reads DWS), so a
@@ -33,6 +41,7 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 from realtime_datawarehouse_spark.operators import config_router
@@ -47,8 +56,34 @@ from realtime_datawarehouse_spark.sources.debezium import config_from_rows
 from realtime_datawarehouse_spark.tables import table
 
 
+# The schema of every table this module writes and reads back, as its
+# builder writes it (a StructType or DDL, as ``DataFrameReader.schema``
+# takes either); tests/test_warehouse.py checks each against the files.
+_SCHEMAS: dict[tuple[str, str], StructType | str] = {
+    ("ods", "topic_db_dims"): maxwell.MAXWELL_SCHEMA,
+    ("ods", "topic_db_cart"): maxwell.MAXWELL_SCHEMA,
+    ("ods", "topic_log"): "value string",
+    ("dwd", "order_detail"): (
+        "order_id bigint, detail_id int, sku_id bigint, user_id bigint, "
+        "create_time timestamp, split_original_amount double, dt date"
+    ),
+    ("dwd", "cart_add"): (
+        "id string, user_id string, sku_id string, sku_num_delta int, "
+        "change_type string"
+    ),
+    ("dws", "trade_daily"): "dt date, order_amount double, order_uu_ct bigint",
+}
+
+
 def _path(out_dir: str, layer: str, name: str) -> str:
     return os.path.join(out_dir, layer, name)
+
+
+def _read(spark: SparkSession, out_dir: str, layer: str, name: str) -> DataFrame:
+    """Read back a table this module wrote, by its declared schema."""
+    return spark.read.schema(_SCHEMAS[layer, name]).parquet(
+        _path(out_dir, layer, name)
+    )
 
 
 def _write_tables(
@@ -87,7 +122,7 @@ def build_ods(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 def build_dim(spark: SparkSession, out_dir: str) -> None:
     """DIM: config-driven routing + PK upsert-collapse per sink table
     (DimApp; one output table per config row, like K4/K5)."""
-    env = spark.read.parquet(_path(out_dir, "ods", "topic_db_dims"))
+    env = _read(spark, out_dir, "ods", "topic_db_dims")
     config = config_from_rows(spark, ROUTER_CONFIG_ROWS)
     state = config_router.upsert_state(config_router.route(env, config))
     frames = config_router.split_by_sink(
@@ -106,7 +141,7 @@ def build_dwd(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     def cart_add() -> DataFrame:
         # the envelope ts (epoch-seconds stand-in = orderkey here; real
         # feeds carry true epochs) stays a plain column
-        env = spark.read.parquet(_path(out_dir, "ods", "topic_db_cart"))
+        env = _read(spark, out_dir, "ods", "topic_db_cart")
         return maxwell.cart_add_delta(maxwell.etl_filter(env))
 
     def order_detail() -> DataFrame:
@@ -126,7 +161,7 @@ def build_dwd(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         )
 
     # page_log and dirty share one parse of the raw log lines
-    raw = spark.read.parquet(_path(out_dir, "ods", "topic_log"))
+    raw = _read(spark, out_dir, "ods", "topic_log")
     clean, dirty = log_events.parse_with_dirty_routing(raw)
 
     def page_log() -> DataFrame:
@@ -147,8 +182,8 @@ def build_dwd(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
 def build_dws(spark: SparkSession, out_dir: str) -> None:
     """DWS: summaries over DWD facts only (never back to ODS/source)."""
-    # both order_detail summaries share one read (and its schema job)
-    od = spark.read.parquet(_path(out_dir, "dwd", "order_detail"))
+    # both order_detail summaries share one read
+    od = _read(spark, out_dir, "dwd", "order_detail")
 
     def sku_order() -> DataFrame:
         return od.groupBy("sku_id").agg(
@@ -163,7 +198,7 @@ def build_dws(spark: SparkSession, out_dir: str) -> None:
         )
 
     def cart_uu() -> DataFrame:
-        cart = spark.read.parquet(_path(out_dir, "dwd", "cart_add"))
+        cart = _read(spark, out_dir, "dwd", "cart_add")
         w = Window.partitionBy("user_id").orderBy("id")
         return (
             cart.withColumn("rn", F.row_number().over(w))
@@ -183,7 +218,7 @@ def ads_gmv(spark: SparkSession, out_dir: str, dt: str) -> float:
     """ADS /gmv over the DWS layer (pushed to the store like the reference
     pushes into ClickHouse — here one filtered sum over DWS ``trade_daily``).
     No temp view: concurrent callers on different ``out_dir``s stay apart."""
-    daily = spark.read.parquet(_path(out_dir, "dws", "trade_daily"))
+    daily = _read(spark, out_dir, "dws", "trade_daily")
     row = daily.where(F.col("dt") == dt).agg(
         F.sum("order_amount").alias("gmv")
     ).collect()[0]

@@ -28,8 +28,9 @@ Endpoints (same routes, params, and payload shapes as the reference):
         reads, no Spark jobs; requires loop_paths)
 
 Like the reference, an absent/zero ``date`` defaults to today
-(DateFormatUtil.now()). Unknown routes return 404; handler errors return
-{"status": 1, "msg": ...} with HTTP 500.
+(DateFormatUtil.now()). Unknown routes return 404; a missing, non-integer
+or out-of-range ``vec_id``/``k``/``doc_id`` returns 400; other handler
+errors return {"status": 1, "msg": ...} with HTTP 500.
 
 Scale note: the service holds ONE shared SparkSession; each request is a
 pushed-down aggregate (date-pruned scan → broadcast dims → tiny group-by),
@@ -53,6 +54,26 @@ from realtime_datawarehouse_spark import serving
 
 def _today() -> str:
     return _date.today().strftime("%Y%m%d")
+
+
+class _BadRequest(ValueError):
+    """A request parameter is missing or malformed: answered with 400."""
+
+
+def _int_param(
+    q: dict[str, list[str]], name: str, default: int | None = None
+) -> int:
+    if name not in q:
+        if default is None:
+            raise _BadRequest(f"{name} is required")
+        return default
+    try:
+        value = int(q[name][0])
+    except ValueError:
+        raise _BadRequest(f"{name} must be an integer") from None
+    if not -(2**63) <= value < 2**63:  # a Spark bigint literal
+        raise _BadRequest(f"{name} is outside the 64-bit range")
+    return value
 
 
 def make_server(
@@ -114,18 +135,13 @@ def make_server(
                 elif url.path == "/province":
                     self._reply(200, serving.province_stats(spark, sf_dir, date))
                 elif url.path == "/similar":
-                    if "vec_id" not in q:
-                        self._reply(
-                            400, {"status": 1, "msg": "vec_id is required"}
-                        )
-                        return
                     self._reply(
                         200,
                         serving.similar(
                             spark,
                             sf_dir,
-                            int(q["vec_id"][0]),
-                            k=int(q.get("k", ["5"])[0]),
+                            _int_param(q, "vec_id"),
+                            k=_int_param(q, "k", 5),
                             index_path=ann_index_path,
                             centroids=ann_centroids,
                         ),
@@ -149,7 +165,7 @@ def make_server(
                             spark,
                             sf_dir,
                             doc_id=(
-                                int(q["doc_id"][0]) if has_doc else None
+                                _int_param(q, "doc_id") if has_doc else None
                             ),
                             text=q["text"][0] if has_text else None,
                             vocab_path=bpe_vocab_path,
@@ -194,23 +210,20 @@ def make_server(
                         },
                     )
                 elif url.path == "/quality":
-                    if "doc_id" not in q:
-                        self._reply(
-                            400, {"status": 1, "msg": "doc_id is required"}
-                        )
-                        return
                     self._reply(
                         200,
                         serving.quality(
                             spark,
                             sf_dir,
-                            int(q["doc_id"][0]),
+                            _int_param(q, "doc_id"),
                             quality_path=quality_path,
                             weights=quality_weights,
                         ),
                     )
                 else:
                     self._reply(404, {"status": 1, "msg": "no such route"})
+            except _BadRequest as e:
+                self._reply(400, {"status": 1, "msg": str(e)})
             except Exception as e:  # keep the service up on bad requests
                 self._reply(500, {"status": 1, "msg": str(e)})
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 TABLE_PROCESS_SCHEMA = StructType(
     [
@@ -65,19 +65,20 @@ def latest_config(env: DataFrame) -> DataFrame:
 def config_from_rows(
     spark: SparkSession, rows: list[dict[str, str | None]]
 ) -> DataFrame:
-    """S7-style literal config source (tests / bootstrap)."""
-    return spark.createDataFrame(
-        [
-            (
-                r["source_table"],
-                r["sink_table"],
-                r["sink_columns"],
-                r.get("sink_pk"),
-                r.get("sink_extend"),
-            )
-            for r in rows
-        ],
-        TABLE_PROCESS_SCHEMA,
+    """S7-style literal config source (tests / bootstrap). The rows are
+    typed literals in the plan, so reading or broadcasting the config is a
+    one-task JVM job, not a round trip through a Python worker."""
+    structs = [
+        F.struct(
+            *[
+                F.lit(r.get(f.name)).cast(f.dataType).alias(f.name)
+                for f in TABLE_PROCESS_SCHEMA
+            ]
+        )
+        for r in rows
+    ]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*structs).cast(ArrayType(TABLE_PROCESS_SCHEMA)))
     )
 
 

@@ -95,6 +95,30 @@ def test_http_similar_missing_vec_id_400(ads_server):
     assert ei.value.code == 400
 
 
+@pytest.mark.parametrize(
+    "query, msg",
+    [
+        ("similar?vec_id=abc", "vec_id must be an integer"),
+        ("similar?vec_id=3&k=five", "k must be an integer"),
+        ("quality?doc_id=1.5", "doc_id must be an integer"),
+        ("encode?doc_id=x", "doc_id must be an integer"),
+        ("similar?vec_id=" + "9" * 20, "vec_id is outside the 64-bit range"),
+    ],
+)
+def test_http_malformed_integer_param_400(ads_server, query, msg):
+    """A malformed integer parameter is the caller's error: 400 naming
+    the parameter, not a 500 echoing the parser's or the JVM's exception."""
+    import urllib.error
+
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _get(f"{ads_server}/{query}")
+    assert ei.value.code == 400
+    assert json.loads(ei.value.read().decode("utf-8")) == {
+        "status": 1,
+        "msg": msg,
+    }
+
+
 def test_http_similar_serves_from_standing_index(spark, tmp_path):
     """The deployment mode: a server built with ann_index_path serves
     /similar from the incrementally-maintained inverted-list table —

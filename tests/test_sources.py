@@ -230,6 +230,38 @@ def test_kafka_builder_raises_clear_error_without_classpath(spark):
         kafka.read_stream(spark, "topic_db")
 
 
+def test_config_from_rows_plans_no_python_rdd(spark):
+    """The literal config is typed literals in the plan: reading or
+    broadcasting it runs in the JVM, with no Python-worker RDD scan."""
+    from realtime_datawarehouse_spark.plans.cdc_pipelines import (
+        ROUTER_CONFIG_ROWS,
+    )
+
+    cfg = debezium.config_from_rows(spark, ROUTER_CONFIG_ROWS)
+    plan = cfg._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
+    assert [r.asDict() for r in cfg.collect()] == ROUTER_CONFIG_ROWS
+
+
+def test_config_from_rows_empty_and_null_fields(spark):
+    """No rows give an empty frame of TABLE_PROCESS_SCHEMA; an absent or
+    None sink_pk / sink_extend stays a typed string null."""
+    empty = debezium.config_from_rows(spark, [])
+    assert empty.schema == debezium.TABLE_PROCESS_SCHEMA
+    assert empty.collect() == []
+
+    cfg = debezium.config_from_rows(
+        spark,
+        [{"source_table": "part", "sink_table": "dim_part",
+          "sink_columns": "p_partkey", "sink_pk": None}],
+    )
+    assert cfg.schema == debezium.TABLE_PROCESS_SCHEMA
+    assert cfg.collect()[0].asDict() == {
+        "source_table": "part", "sink_table": "dim_part",
+        "sink_columns": "p_partkey", "sink_pk": None, "sink_extend": None,
+    }
+
+
 def test_cdc_snapshot_then_tail(spark, tmp_path):
     """S4: Flink-CDC StartupOptions.initial semantics — batch 0 replays the
     snapshot as op='r' envelopes, later files are the binlog tail; the

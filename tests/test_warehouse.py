@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime
 import os
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -82,13 +83,13 @@ def test_layered_pipeline_end_to_end(spark, duck, tmp_path):
     assert abs(got - float(exp_gmv)) < 1e-6 * max(1.0, abs(exp_gmv))
 
 
-def test_layer_writes_carry_the_callers_job_group(spark, tmp_path):
-    """Each layer's writes run on their own threads, yet every job they
-    start stays under the caller's job group: at least one job per table."""
+@contextmanager
+def _job_group(spark, group: str):
+    """Run the body under ``setJobGroup(group)``; yields the SparkContext."""
     sc = spark.sparkContext
-    sc.setJobGroup("t", "build_ods")
+    sc.setJobGroup(group, group)
     try:
-        warehouse.build_ods(spark, SF_DIR, str(tmp_path / "wh"))
+        yield sc
     finally:  # the session is shared: clear what setJobGroup set
         for key in (
             "spark.jobGroup.id",
@@ -96,7 +97,49 @@ def test_layer_writes_carry_the_callers_job_group(spark, tmp_path):
             "spark.job.interruptOnCancel",
         ):
             sc.setLocalProperty(key, None)
+
+
+@pytest.fixture(scope="module")
+def built_warehouse(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("wh"))
+    warehouse.run_warehouse(spark, SF_DIR, out)
+    return out
+
+
+def test_layer_writes_carry_the_callers_job_group(spark, tmp_path):
+    """Each layer's writes run on their own threads, yet every job they
+    start stays under the caller's job group: at least one job per table."""
+    with _job_group(spark, "t") as sc:
+        warehouse.build_ods(spark, SF_DIR, str(tmp_path / "wh"))
     assert len(sc.statusTracker().getJobIdsForGroup("t")) >= 3
+
+
+def test_declared_layer_schemas_match_the_written_files(spark, built_warehouse):
+    """Layers read each other's tables by declared schema. A declaration
+    that drifts from what the writer writes would read the drifted column
+    as nulls without an error, so every declared field name and type must
+    equal the file's (nullability aside)."""
+
+    def fields(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema]
+
+    for layer, name in warehouse._SCHEMAS:
+        written = spark.read.parquet(os.path.join(built_warehouse, layer, name))
+        declared = warehouse._read(spark, built_warehouse, layer, name)
+        assert fields(written.schema) == fields(declared.schema), (layer, name)
+
+
+def test_ads_gmv_runs_at_most_two_jobs(spark, built_warehouse):
+    """ADS reads DWS by its declared schema: the gmv lookup is the
+    aggregate's own jobs, with no schema-discovery job before them."""
+    dt = str(
+        spark.read.parquet(os.path.join(built_warehouse, "dws", "trade_daily"))
+        .first()
+        .dt
+    )
+    with _job_group(spark, "ads_gmv") as sc:
+        assert warehouse.ads_gmv(spark, built_warehouse, dt) > 0
+    assert len(sc.statusTracker().getJobIdsForGroup("ads_gmv")) <= 2
 
 
 def test_failed_layer_write_raises_after_the_others_land(
