@@ -29,8 +29,10 @@ Endpoints (same routes, params, and payload shapes as the reference):
 
 Like the reference, an absent/zero ``date`` defaults to today
 (DateFormatUtil.now()). Unknown routes return 404; a missing, non-integer
-or out-of-range ``vec_id``/``k``/``doc_id`` returns 400; other handler
-errors return {"status": 1, "msg": ...} with HTTP 500.
+or out-of-range ``vec_id``/``k``/``doc_id`` returns 400; any other handler
+error is logged with its traceback and answered HTTP 500
+{"status": 1, "msg": "internal error"} (the cause, often a Java stack
+trace, stays out of the reply).
 
 Scale note: the service holds ONE shared SparkSession; each request is a
 pushed-down aggregate (date-pruned scan → broadcast dims → tiny group-by),
@@ -42,6 +44,7 @@ thread-per-request frontend.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from datetime import date as _date
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -50,6 +53,8 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 
 from realtime_datawarehouse_spark import serving
+
+_log = logging.getLogger(__name__)
 
 
 def _today() -> str:
@@ -224,8 +229,9 @@ def make_server(
                     self._reply(404, {"status": 1, "msg": "no such route"})
             except _BadRequest as e:
                 self._reply(400, {"status": 1, "msg": str(e)})
-            except Exception as e:  # keep the service up on bad requests
-                self._reply(500, {"status": 1, "msg": str(e)})
+            except Exception:  # keep the service up; the cause goes to the log
+                _log.exception("GET %s failed", self.path)
+                self._reply(500, {"status": 1, "msg": "internal error"})
 
         def log_message(self, *args) -> None:  # quiet test output
             pass

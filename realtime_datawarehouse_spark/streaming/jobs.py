@@ -43,13 +43,15 @@ DEFAULT_WATERMARK = "3 seconds"  # W2/W3 bounded out-of-orderness
 DAY_TTL_WATERMARK = "26 hours"
 
 
-def parquet_stream(spark, path: str, schema: StructType, max_files: int = 1) -> DataFrame:
-    """File-based stream (one micro-batch per file with max_files=1) — the
-    test-rig stand-in for a Kafka topic; swap sources/kafka.read_stream in
-    production wiring."""
+def parquet_stream(spark, path: str, schema: StructType) -> DataFrame:
+    """File-based stream, one micro-batch per file — the test-rig stand-in
+    for a raw Kafka topic, where each input file is one delivery; swap
+    sources/kafka.read_stream in production wiring. Not for storage
+    boundaries between queries: those read every committed file per
+    trigger (streaming/pipelines.py ``_boundary``)."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
 
@@ -394,20 +396,6 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_to_memory_continuous(
-    stream_df: DataFrame, name: str, output_mode: str = "append"
-):
-    """Long-running memory-sink query (no availableNow): stays alive so a
-    chained upstream stage can keep feeding it; drain deterministically
-    with ``q.processAllAvailable()``."""
-    return (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
         .start()
     )
 

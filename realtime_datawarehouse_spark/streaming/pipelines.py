@@ -13,7 +13,7 @@ PK-collapse on read (sources/kafka.latest_by_key).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 import os
@@ -22,43 +22,40 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 
 from realtime_datawarehouse_spark.functions.compare import pround
-from realtime_datawarehouse_spark.operators import config_router, table_store
+from realtime_datawarehouse_spark.operators import config_router, sinks, table_store
 from realtime_datawarehouse_spark.sources import log_events, maxwell
 from realtime_datawarehouse_spark.streaming import jobs
 
 
 def dwd_cart_add(raw: DataFrame) -> DataFrame:
     """DwdTradeCartAdd (rt/app/dwd/db/DwdTradeCartAdd.java): topic_db →
-    Maxwell parse → ETL filter → cart-add facts with quantity delta."""
-    env = maxwell.parse_envelope(raw)
-    return maxwell.cart_add_delta(maxwell.etl_filter(env))
-
-
-def dws_cart_add_uu_window(
-    raw: DataFrame, watermark: str = jobs.DAY_TTL_WATERMARK
-) -> DataFrame:
-    """DwsTradeCartAddUuWindow (rt/app/dws/DwsTradeCartAddUuWindow.java:76-139):
-    topic_db → cart facts → first event per user per day → 10 s tumble count.
-
-    Event time arrives as the Maxwell epoch-seconds string ``ts``
-    (W4 seconds→timestamp fixup, …:66). The watermark defaults to the
-    day-TTL delay: the daily dedup needs ≥ 24h of state retention to be
-    exact AND leak-free (see jobs.first_per_user_day), and Spark ties dedup
-    eviction and window emission to the one per-stream watermark — so
-    windows emit once the day closes, the batch-daily reading of the job."""
-    env = maxwell.parse_envelope(raw)
-    kept = maxwell.etl_filter(env).withColumn(
-        "event_time", F.timestamp_seconds(F.col("ts").cast("long"))
+    Maxwell parse → ETL filter → ``cart_info`` rows → cart-add facts with
+    quantity delta and ``event_time`` (the epoch-seconds ``ts`` as a
+    timestamp, the W4 seconds→timestamp fixup)."""
+    env = maxwell.etl_filter(maxwell.parse_envelope(raw)).where(
+        F.col("table") == "cart_info"
     )
-    facts = kept.select(
-        F.col("data").getItem("user_id").alias("user_id"),
-        F.col("event_time"),
-    ).where(F.col("user_id").isNotNull())
+    return maxwell.cart_add_delta(
+        env.withColumn(
+            "event_time", F.timestamp_seconds(F.col("ts").cast("long"))
+        ),
+        extra_cols=("event_time",),
+    )
+
+
+def _cart_add_uu_windows(facts: DataFrame) -> DataFrame:
+    """First cart-add fact per user per day → 10 s tumble UU count.
+
+    The watermark is the day-TTL delay: the daily dedup needs ≥ 24h of
+    state retention to be exact AND leak-free (see jobs.first_per_user_day),
+    and Spark ties dedup eviction and window emission to the one per-stream
+    watermark — so windows emit once the day closes, the batch-daily
+    reading of the job."""
     firsts = jobs.first_per_user_day(
         facts.withColumn("visit_date", F.to_date("event_time")),
         ts_col="event_time",
         key="user_id",
-        watermark=watermark,
+        watermark=jobs.DAY_TTL_WATERMARK,
     )
     return (
         firsts.groupBy(F.window("event_time", "10 seconds"))
@@ -69,6 +66,15 @@ def dws_cart_add_uu_window(
             "cart_add_uu_ct",
         )
     )
+
+
+def dws_cart_add_uu_window(raw: DataFrame) -> DataFrame:
+    """DwsTradeCartAddUuWindow (rt/app/dws/DwsTradeCartAddUuWindow.java:76-139):
+    topic_db → :func:`dwd_cart_add` facts → first fact per user per day →
+    10 s tumble count. Only cart-add facts count, as in the reference job,
+    which reads the dwd_trade_cart_add topic: rows of other tables and
+    cart updates that do not raise ``sku_num`` are not cart adds."""
+    return _cart_add_uu_windows(dwd_cart_add(raw))
 
 
 def dws_sku_order_window(
@@ -2064,28 +2070,6 @@ def streaming_corpus_ingest(
 # carries one row per (mid, visit day) — the upsert-free append contract of
 # the reference's dwd_traffic_unique_visitor_detail topic.
 
-def _uv_boundary_schema():
-    from pyspark.sql.types import (
-        DateType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    return StructType(
-        [
-            StructField("mid", StringType()),
-            StructField("vc", StringType()),
-            StructField("ch", StringType()),
-            StructField("ar", StringType()),
-            StructField("is_new", StringType()),
-            StructField("event_time", TimestampType()),
-            StructField("visit_date", DateType()),
-        ]
-    )
-
-
 def dwd_unique_visitor_detail(page: DataFrame) -> DataFrame:
     """DwdTrafficUniqueVisitorDetail (rt/app/dwd/log/…UniqueVisitorDetail
     .java:30-70): session-entry pages only (last_page_id null), then the
@@ -2139,11 +2123,61 @@ def dws_traffic_channel_window(
     )
 
 
+def _boundary(
+    spark: SparkSession, df: DataFrame, work_dir: str, name: str, n: int
+):
+    """One append storage boundary of a §3.4 column: start the query that
+    writes ``df`` to ``{work_dir}/<name>`` (checkpoint ``{work_dir}/ck<n>``)
+    and return it with the downstream stream over that directory.
+
+    The downstream reads with ``df``'s own schema and NO per-trigger file
+    cap: the file source lists the sink's ``_spark_metadata`` log, so each
+    trigger takes every committed file and upstream batches arrive whole.
+    A cap would split one upstream batch (one file per state partition,
+    each spanning the batch's event time) across triggers, and the first
+    file's event time would move a downstream watermark past rows still
+    unread, dropping them as late."""
+    path = os.path.join(work_dir, name)
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", os.path.join(work_dir, f"ck{n}"))
+        .outputMode("append")
+        .start()
+    )
+    return q, spark.readStream.schema(df.schema).parquet(path)
+
+
+def _merge_sink(
+    df: DataFrame, work_dir: str, store_path: str, pk: Column, mode: str
+):
+    """The last hop of a §3.4 column (checkpoint ``{work_dir}/ck3``): each
+    micro-batch MERGEs into the versioned table store at ``store_path``
+    (sinks.upsert_sink) keyed by the ``pk`` column expression, stored as
+    column ``pk``; the batch id is the row version, so per key the row of
+    the latest batch wins."""
+
+    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
+        sinks.upsert_sink(
+            batch_df.sparkSession,
+            batch_df.withColumns({"pk": pk, "ver": F.lit(batch_id)}),
+            store_path,
+            pk="pk",
+            version_col="ver",
+        )
+
+    return (
+        df.writeStream.outputMode(mode)
+        .foreachBatch(upsert_batch)
+        .option("checkpointLocation", os.path.join(work_dir, "ck3"))
+        .start()
+    )
+
+
 def traffic_stream_graph(
     spark: SparkSession,
     raw: DataFrame,
     work_dir: str,
-    memory_table: str = "t_traffic_dws",
     store_path: str | None = None,
 ) -> list:
     """The §3.4 traffic dataflow as one running set of THREE chained
@@ -2153,107 +2187,36 @@ def traffic_stream_graph(
         → ``{work_dir}/dwd_traffic_page_log``   (append boundary)
       boundary ── q2: dwd_unique_visitor_detail
         → ``{work_dir}/dwd_traffic_uv``         (append boundary)
-      boundary ── q3: dws_traffic_channel_window → memory sink, or (with
-        ``store_path``) foreachBatch MERGE into the versioned table store
-        — the reference's ClickHouse-sink shape, shared with the trade
-        column in :func:`full_stream_topology`.
+      boundary ── q3: dws_traffic_channel_window, foreachBatch MERGE into
+        the versioned table store (the reference's ClickHouse-sink shape)
+        → ``{store_path}`` (default ``{work_dir}/dws_traffic_channel``)
 
     Every boundary is replayable and keyed exactly like the reference's
-    intermediate Kafka topics; each query owns its checkpoint, so any stage
-    can crash/restart independently (the file-source metadata log resumes
-    where it stopped). Returns [q1, q2, q3]; drain with
+    intermediate Kafka topics, and each downstream query reads every
+    committed file per trigger (:func:`_boundary`); each query owns its
+    checkpoint, so any stage can crash/restart independently (the
+    file-source metadata log resumes where it stopped). Read the served
+    table with ``table_store.read_state``. Returns [q1, q2, q3]; drain with
     ``q.processAllAvailable()`` in topological order.
     """
-    page_dir = os.path.join(work_dir, "dwd_traffic_page_log")
-    uv_dir = os.path.join(work_dir, "dwd_traffic_uv")
-
-    split = dwd_log_split(raw)
-    q1 = (
-        split["page"]
-        .writeStream.format("parquet")
-        .option("path", page_dir)
-        .option("checkpointLocation", os.path.join(work_dir, "ck1"))
-        .outputMode("append")
-        .start()
+    store_path = store_path or os.path.join(work_dir, "dws_traffic_channel")
+    q1, page = _boundary(
+        spark, dwd_log_split(raw)["page"], work_dir, "dwd_traffic_page_log", 1
     )
-
-    page_schema = split["page"].schema
-    page = jobs.parquet_stream(spark, page_dir, page_schema)
-    q2 = (
-        dwd_unique_visitor_detail(page)
-        .writeStream.format("parquet")
-        .option("path", uv_dir)
-        .option("checkpointLocation", os.path.join(work_dir, "ck2"))
-        .outputMode("append")
-        .start()
+    q2, uv = _boundary(
+        spark, dwd_unique_visitor_detail(page), work_dir, "dwd_traffic_uv", 2
     )
-
-    uv = jobs.parquet_stream(spark, uv_dir, _uv_boundary_schema())
-    dws = dws_traffic_channel_window(uv)
-    if store_path is None:
-        q3 = jobs.run_to_memory_continuous(dws, memory_table)
-        return [q1, q2, q3]
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # injective composite PK: JSON keeps nulls and escapes separators,
-        # so distinct dimension tuples can never collapse to one key
-        # (concat_ws would drop NULL dims and collide on '|' in values)
-        table_store.merge_upsert(
-            batch_df.sparkSession,
-            batch_df.withColumn(
-                "pk",
-                F.to_json(
-                    F.struct("stt", "vc", "ch", "ar", "is_new"),
-                    {"ignoreNullFields": "false"},
-                ),
-            ).withColumn("ver", F.lit(batch_id)),
-            store_path,
-            pk="pk",
-            version_col="ver",
-        )
-
-    q3 = (
-        dws.writeStream.outputMode("append")
-        .foreachBatch(upsert_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "ck3"))
-        .start()
+    # injective composite PK: JSON keeps nulls and escapes separators, so
+    # distinct dimension tuples can never collapse to one key (concat_ws
+    # would drop NULL dims and collide on '|' in values)
+    pk = F.to_json(
+        F.struct("stt", "vc", "ch", "ar", "is_new"),
+        {"ignoreNullFields": "false"},
+    )
+    q3 = _merge_sink(
+        dws_traffic_channel_window(uv), work_dir, store_path, pk, "append"
     )
     return [q1, q2, q3]
-
-
-def _cart_fact_boundary_schema():
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    return StructType(
-        [
-            StructField("user_id", StringType()),
-            StructField("sku_num_delta", IntegerType()),
-            StructField("event_time", TimestampType()),
-        ]
-    )
-
-
-def _cart_uu_boundary_schema():
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("stt", StringType()),
-            StructField("edt", StringType()),
-            StructField("cart_add_uu_ct", LongType()),
-        ]
-    )
 
 
 def trade_stream_graph(
@@ -2266,88 +2229,35 @@ def trade_stream_graph(
     streaming queries over shared storage boundaries (the right-column
     twin of ``traffic_stream_graph``):
 
-      raw (topic_db) ── q1: Maxwell parse → ETL filter → cart-add facts
-        with quantity delta + event time
+      raw (topic_db) ── q1: dwd_cart_add (cart-add facts with quantity
+        delta + event time)
         → ``{work_dir}/dwd_cart_add``        (append boundary)
-      boundary ── q2: first-per-user-day dedup → 10 s tumble UU window
+      boundary ── q2: the dws_cart_add_uu_window body (first-per-user-day
+        dedup → 10 s tumble UU window)
         → ``{work_dir}/dws_cart_uu``         (append boundary)
       boundary ── q3: ADS daily rollup, foreachBatch MERGE into the
         versioned table store (the reference's OLAP-sink upsert shape)
-        → ``{store_path}``
+        → ``{store_path}`` (default ``{work_dir}/ads_cart_daily``)
 
     Every boundary is replayable and keyed like the reference's
-    intermediate Kafka topics; each query owns its checkpoint. The ADS
-    stage runs in UPDATE mode — per batch, changed days MERGE by PK into
-    the store, so the served table always holds the latest rollup (K2's
-    upsert contract instead of append windows). Returns [q1, q2, q3].
+    intermediate Kafka topics, and each downstream query reads every
+    committed file per trigger (:func:`_boundary`); each query owns its
+    checkpoint. The ADS stage runs in UPDATE mode — per batch, changed days
+    MERGE by PK ``dt`` into the store, so the served table always holds the
+    latest rollup (K2's upsert contract instead of append windows).
+    Returns [q1, q2, q3].
     """
-    from realtime_datawarehouse_spark.sources import maxwell as mx
-
     store_path = store_path or os.path.join(work_dir, "ads_cart_daily")
-    dwd_dir = os.path.join(work_dir, "dwd_cart_add")
-    dws_dir = os.path.join(work_dir, "dws_cart_uu")
-
-    env = mx.parse_envelope(raw)
-    kept = mx.etl_filter(env).withColumn(
-        "event_time", F.timestamp_seconds(F.col("ts").cast("long"))
+    q1, facts = _boundary(spark, dwd_cart_add(raw), work_dir, "dwd_cart_add", 1)
+    q2, uu = _boundary(
+        spark, _cart_add_uu_windows(facts), work_dir, "dws_cart_uu", 2
     )
-    facts = mx.cart_add_delta(kept, extra_cols=("event_time",)).select(
-        "user_id", "sku_num_delta", "event_time"
-    )
-    q1 = (
-        facts.writeStream.format("parquet")
-        .option("path", dwd_dir)
-        .option("checkpointLocation", os.path.join(work_dir, "ck1"))
-        .outputMode("append")
-        .start()
-    )
-
-    f = jobs.parquet_stream(spark, dwd_dir, _cart_fact_boundary_schema())
-    firsts = jobs.first_per_user_day(
-        f.withColumn("visit_date", F.to_date("event_time")),
-        ts_col="event_time",
-        key="user_id",
-        watermark=jobs.DAY_TTL_WATERMARK,
-    )
-    uu = (
-        firsts.groupBy(F.window("event_time", "10 seconds"))
-        .agg(F.count("*").alias("cart_add_uu_ct"))
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format("window.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
-            "cart_add_uu_ct",
-        )
-    )
-    q2 = (
-        uu.writeStream.format("parquet")
-        .option("path", dws_dir)
-        .option("checkpointLocation", os.path.join(work_dir, "ck2"))
-        .outputMode("append")
-        .start()
-    )
-
-    w = jobs.parquet_stream(spark, dws_dir, _cart_uu_boundary_schema())
     daily = (
-        w.select(F.substring("stt", 1, 10).alias("dt"), "cart_add_uu_ct")
+        uu.select(F.substring("stt", 1, 10).alias("dt"), "cart_add_uu_ct")
         .groupBy("dt")
         .agg(F.sum("cart_add_uu_ct").alias("cart_add_uu"))
     )
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table_store.merge_upsert(
-            batch_df.sparkSession,
-            batch_df.withColumn("ver", F.lit(batch_id)),
-            store_path,
-            pk="dt",
-            version_col="ver",
-        )
-
-    q3 = (
-        daily.writeStream.outputMode("update")
-        .foreachBatch(upsert_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "ck3"))
-        .start()
-    )
+    q3 = _merge_sink(daily, work_dir, store_path, F.col("dt"), "update")
     return [q1, q2, q3]
 
 

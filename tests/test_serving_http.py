@@ -119,6 +119,37 @@ def test_http_malformed_integer_param_400(ads_server, query, msg):
     }
 
 
+def test_http_internal_error_is_logged_not_echoed(
+    ads_server, monkeypatch, caplog
+):
+    """A handler failure answers a generic 500; its cause (here a
+    Py4J-style Java stack trace) goes to the log, not to the client."""
+    import logging
+    import urllib.error
+
+    trace = (
+        "An error occurred while calling o696.equalTo. Trace:\n"
+        "java.lang.NumberFormatException: For input string\n"
+        "\tat java.base/java.lang.Long.parseLong(Long.java:711)"
+    )
+
+    def boom(*args, **kwargs):
+        raise RuntimeError(trace)
+
+    monkeypatch.setattr(serving, "gmv", boom)
+    with caplog.at_level(logging.ERROR, logger=serving_http.__name__):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(f"{ads_server}/gmv?date=20240101")
+    assert ei.value.code == 500
+    body = ei.value.read().decode("utf-8")
+    assert json.loads(body) == {"status": 1, "msg": "internal error"}
+    assert "java" not in body and "Trace" not in body
+    [rec] = [r for r in caplog.records if r.name == serving_http.__name__]
+    assert rec.levelno == logging.ERROR and "/gmv?date=20240101" in rec.getMessage()
+    assert rec.exc_info and "java.lang.NumberFormatException" in str(rec.exc_info[1])
+    assert "Traceback" in caplog.text
+
+
 def test_http_similar_serves_from_standing_index(spark, tmp_path):
     """The deployment mode: a server built with ann_index_path serves
     /similar from the incrementally-maintained inverted-list table —

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from realtime_datawarehouse_spark.streaming import jobs, pipelines
@@ -58,6 +60,34 @@ def test_cart_add_uu_pipeline(spark, tmp_path):
     # window may be withheld by the watermark, the first must have closed
     by_stt = {r.stt: r.cart_add_uu_ct for r in rows}
     assert by_stt["2024-01-01 00:00:00"] == 2
+
+
+# neither row is a cart add: an order_info row carrying a user_id, and a
+# cart_info update that LOWERS sku_num
+CART_NOT_ADDS = [
+    '{"database":"g","table":"order_info","type":"insert","ts":"1704067202",'
+    '"data":{"id":"7","user_id":"u7","total_amount":"10.0"}}',
+    '{"database":"g","table":"cart_info","type":"update","ts":"1704067203",'
+    '"old":{"sku_num":"5"},"data":{"id":"8","user_id":"u8","sku_id":"s1","sku_num":"2"}}',
+]
+
+
+def test_cart_add_uu_counts_only_cart_add_facts(spark, tmp_path):
+    """DwsTradeCartAddUuWindow reads dwd_trade_cart_add: a user counts
+    only through a cart-add fact, not through any topic_db row that
+    carries a user_id."""
+    raw = _stream_of_lines(
+        spark, tmp_path, [CART_LINES_B1 + CART_NOT_ADDS] + CART_HEARTBEATS
+    )
+    q = jobs.run_to_memory(
+        pipelines.dws_cart_add_uu_window(raw), "t_cart_uu_facts", "append"
+    )
+    q.awaitTermination()
+    by_stt = {
+        r.stt: r.cart_add_uu_ct
+        for r in spark.table("t_cart_uu_facts").collect()
+    }
+    assert by_stt["2024-01-01 00:00:00"] == 2  # u1 and u2 only
 
 
 LOG_HEARTBEAT = (
@@ -475,41 +505,15 @@ GRAPH_HEARTBEATS = [
 ]
 
 
-def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
-    """VERDICT r03 #5: SURVEY §3.4's left column as ONE running set of
-    three chained streaming queries over shared storage boundaries —
-    log split → dwd_traffic_page_log → UV detail → uv boundary → channel
-    DWS — with batch parity at the final DWS output."""
+def _traffic_windows_batch(spark, lines):
+    """The traffic column as one batch query over ``lines``: parse → entry
+    pages → first view per (mid, day) → 10 s tumbling UV count per
+    dimension combination, as a set of (stt, vc, ch, ar, is_new, uv_ct)."""
     from pyspark.sql import functions as F
 
-    raw = _stream_of_lines(
-        spark,
-        tmp_path / "in",
-        [GRAPH_LINES_B1, GRAPH_LINES_B2] + GRAPH_HEARTBEATS,
-    )
-    qs = pipelines.traffic_stream_graph(
-        spark, raw, str(tmp_path / "graph"), memory_table="t_traffic_dws"
-    )
-    try:
-        # drain in topological order: each stage consumes everything its
-        # upstream committed before the next drain
-        for q in qs:
-            q.processAllAvailable()
-        got = {
-            (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
-            for r in spark.table("t_traffic_dws").collect()
-            if r.stt.startswith("2024-01-01")
-        }
-    finally:
-        for q in qs:
-            q.stop()
-
-    # batch parity over the same lines: parse → entry pages → first view
-    # per (mid, day) → 10 s tumbling UV count per dimension combination
-    all_lines = GRAPH_LINES_B1 + GRAPH_LINES_B2 + sum(GRAPH_HEARTBEATS, [])
-    raw_b = spark.createDataFrame([(s,) for s in all_lines], "value string")
     from realtime_datawarehouse_spark.sources import log_events
 
+    raw_b = spark.createDataFrame([(s,) for s in lines], "value string")
     clean, _ = log_events.parse_with_dirty_routing(raw_b)
     page = clean.where(~F.col("start").isNotNull())
     entry = page.where(F.col("page.last_page_id").isNull())
@@ -532,7 +536,7 @@ def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
         )
         .select("mid", "visit_date", "f.*")
     )
-    expected = {
+    return {
         (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
         for r in uv.groupBy(
             F.window("event_time", "10 seconds"), "vc", "ch", "ar", "is_new"
@@ -543,7 +547,71 @@ def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
             "vc", "ch", "ar", "is_new", "uv_ct",
         )
         .collect()
+    }
+
+
+def _cart_uu_batch(spark, lines):
+    """Distinct cart-add users per day over ``lines`` as one batch query,
+    {dt: uu}: each user's first cart add lands in exactly one window, so
+    the closed windows of a day sum to this."""
+    from pyspark.sql import functions as F
+
+    from realtime_datawarehouse_spark.sources import maxwell as mx
+
+    env = mx.etl_filter(
+        mx.parse_envelope(
+            spark.createDataFrame([(s,) for s in lines], "value string")
+        )
+    ).where(F.col("table") == "cart_info")
+    facts = mx.cart_add_delta(env, extra_cols=("ts",))
+    return {
+        r.dt: r.uu
+        for r in facts.select(
+            F.date_format(
+                F.timestamp_seconds(F.col("ts").cast("long")), "yyyy-MM-dd"
+            ).alias("dt"),
+            "user_id",
+        )
+        .groupBy("dt")
+        .agg(F.countDistinct("user_id").alias("uu"))
+        .collect()
+    }
+
+
+def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
+    """VERDICT r03 #5: SURVEY §3.4's left column as ONE running set of
+    three chained streaming queries over shared storage boundaries —
+    log split → dwd_traffic_page_log → UV detail → uv boundary → channel
+    DWS — with batch parity at the final DWS output."""
+    from realtime_datawarehouse_spark.operators import table_store as ts
+
+    raw = _stream_of_lines(
+        spark,
+        tmp_path / "in",
+        [GRAPH_LINES_B1, GRAPH_LINES_B2] + GRAPH_HEARTBEATS,
+    )
+    qs = pipelines.traffic_stream_graph(spark, raw, str(tmp_path / "graph"))
+    try:
+        # drain in topological order: each stage consumes everything its
+        # upstream committed before the next drain
+        for q in qs:
+            q.processAllAvailable()
+    finally:
+        for q in qs:
+            q.stop()
+    got = {
+        (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
+        for r in ts.read_state(
+            spark, str(tmp_path / "graph" / "dws_traffic_channel")
+        ).collect()
         if r.stt.startswith("2024-01-01")
+    }
+
+    # batch parity over the same lines
+    all_lines = GRAPH_LINES_B1 + GRAPH_LINES_B2 + sum(GRAPH_HEARTBEATS, [])
+    expected = {
+        w for w in _traffic_windows_batch(spark, all_lines)
+        if w[0].startswith("2024-01-01")
     }
     assert expected, "fixture must produce day-1 windows"
     assert got == expected
@@ -557,11 +625,7 @@ def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
     queries in one run, both columns' DWS/ADS outputs MERGE-upserted into
     the SAME versioned table store root, with batch parity asserted at
     both served tables."""
-    from pyspark.sql import functions as F
-
     from realtime_datawarehouse_spark.operators import table_store as ts
-    from realtime_datawarehouse_spark.sources import log_events
-    from realtime_datawarehouse_spark.sources import maxwell as mx
 
     log_raw = _stream_of_lines(
         spark,
@@ -603,41 +667,9 @@ def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
         if r.stt.startswith("2024-01-01")
     }
     all_lines = GRAPH_LINES_B1 + GRAPH_LINES_B2 + sum(GRAPH_HEARTBEATS, [])
-    raw_b = spark.createDataFrame([(s,) for s in all_lines], "value string")
-    clean, _ = log_events.parse_with_dirty_routing(raw_b)
-    page = clean.where(~F.col("start").isNotNull())
-    entry = page.where(F.col("page.last_page_id").isNull())
-    uv = (
-        entry.select(
-            F.col("common.mid").alias("mid"),
-            F.col("common.vc").alias("vc"),
-            F.col("common.ch").alias("ch"),
-            F.col("common.ar").alias("ar"),
-            F.col("common.is_new").alias("is_new"),
-            F.timestamp_millis(F.col("ts")).alias("event_time"),
-        )
-        .withColumn("visit_date", F.to_date("event_time"))
-        .groupBy("mid", "visit_date")
-        .agg(
-            F.min_by(
-                F.struct("vc", "ch", "ar", "is_new", "event_time"),
-                "event_time",
-            ).alias("f")
-        )
-        .select("mid", "visit_date", "f.*")
-    )
     traffic_want = {
-        (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
-        for r in uv.groupBy(
-            F.window("event_time", "10 seconds"), "vc", "ch", "ar", "is_new"
-        )
-        .agg(F.count("*").alias("uv_ct"))
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            "vc", "ch", "ar", "is_new", "uv_ct",
-        )
-        .collect()
-        if r.stt.startswith("2024-01-01")
+        w for w in _traffic_windows_batch(spark, all_lines)
+        if w[0].startswith("2024-01-01")
     }
     assert traffic_want, "fixture must produce closed day-1 windows"
     assert traffic_served == traffic_want
@@ -648,21 +680,7 @@ def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
         for r in ts.read_state(spark, f"{store}/ads_cart_daily").collect()
     }
     all_db = CART_LINES_B1 + CART_LINES_B2 + sum(CART_HEARTBEATS, [])
-    env = mx.etl_filter(
-        mx.parse_envelope(
-            spark.createDataFrame([(s,) for s in all_db], "value string")
-        )
-    ).withColumn("event_time", F.timestamp_seconds(F.col("ts").cast("long")))
-    facts = mx.cart_add_delta(env, extra_cols=("event_time",))
-    trade_want = {
-        r.dt: r.uu
-        for r in facts.select(
-            F.date_format("event_time", "yyyy-MM-dd").alias("dt"), "user_id"
-        )
-        .groupBy("dt")
-        .agg(F.countDistinct("user_id").alias("uu"))
-        .collect()
-    }
+    trade_want = _cart_uu_batch(spark, all_db)
     assert trade_served["2024-01-01"] == trade_want["2024-01-01"] == 3
     for dt, uu in trade_served.items():
         assert uu <= trade_want[dt]
@@ -675,10 +693,7 @@ def test_full_stream_topology_restarts_from_checkpoints(spark, tmp_path):
     metadata logs, stateful-dedup state, and MERGE versions must resume
     so the final served tables equal the single-run batch parity (the
     reference's commented-out restart-strategy story, done for real)."""
-    from pyspark.sql import functions as F
-
     from realtime_datawarehouse_spark.operators import table_store as ts
-    from realtime_datawarehouse_spark.sources import maxwell as mx
 
     log_dir, db_dir = str(tmp_path / "in_log"), str(tmp_path / "in_db")
     work, store = str(tmp_path / "work"), str(tmp_path / "store")
@@ -736,21 +751,7 @@ def test_full_stream_topology_restarts_from_checkpoints(spark, tmp_path):
         for r in ts.read_state(spark, f"{store}/ads_cart_daily").collect()
     }
     all_db = CART_LINES_B1 + CART_LINES_B2 + sum(CART_HEARTBEATS, [])
-    env = mx.etl_filter(
-        mx.parse_envelope(
-            spark.createDataFrame([(s,) for s in all_db], "value string")
-        )
-    ).withColumn("event_time", F.timestamp_seconds(F.col("ts").cast("long")))
-    want = {
-        r.dt: r.uu
-        for r in mx.cart_add_delta(env, extra_cols=("event_time",))
-        .select(
-            F.date_format("event_time", "yyyy-MM-dd").alias("dt"), "user_id"
-        )
-        .groupBy("dt")
-        .agg(F.countDistinct("user_id").alias("uu"))
-        .collect()
-    }
+    want = _cart_uu_batch(spark, all_db)
     assert trade["2024-01-01"] == want["2024-01-01"] == 3
 
 
@@ -759,10 +760,7 @@ def test_trade_stream_graph_three_hop_parity(spark, tmp_path):
     queries over storage boundaries — Maxwell facts → UU window → ADS
     daily MERGE into the table store — with batch parity at the served
     table: per-day cart-add UU equals the batch distinct-user count."""
-    from pyspark.sql import functions as F
-
     from realtime_datawarehouse_spark.operators import table_store as ts
-    from realtime_datawarehouse_spark.sources import maxwell as mx
 
     raw = _stream_of_lines(
         spark,
@@ -787,25 +785,74 @@ def test_trade_stream_graph_three_hop_parity(spark, tmp_path):
     # (each user's first event lands in exactly one window; summing the
     # closed windows per day = the day's distinct users)
     all_lines = CART_LINES_B1 + CART_LINES_B2 + sum(CART_HEARTBEATS, [])
-    raw_b = spark.createDataFrame([(s,) for s in all_lines], "value string")
-    env = mx.etl_filter(mx.parse_envelope(raw_b)).withColumn(
-        "event_time", F.timestamp_seconds(F.col("ts").cast("long"))
-    )
-    facts = mx.cart_add_delta(env, extra_cols=("event_time",))
-    want = {
-        r.dt: r.uu
-        for r in facts.select(
-            F.date_format("event_time", "yyyy-MM-dd").alias("dt"), "user_id"
-        )
-        .groupBy("dt")
-        .agg(F.countDistinct("user_id").alias("uu"))
-        .collect()
-    }
+    want = _cart_uu_batch(spark, all_lines)
     # day 1 must be fully closed (heartbeats advanced the watermark);
     # the heartbeat day itself may still be open
     assert served["2024-01-01"] == want["2024-01-01"] == 3
     for dt, uu in served.items():
         assert uu <= want[dt]
+
+
+def _log_backlog():
+    """One raw file of session entries for 48 mids × 2 days (2 s apart, so
+    10 windows a day holding 1-2 mids per dimension combination), then two
+    heartbeat files with distinct mids 3 days after the last day."""
+
+    def line(i: int, t_s: int) -> str:
+        return json.dumps({
+            "common": {
+                "mid": f"m{i}",
+                "vc": f"v{i % 2}",
+                "ch": ("app", "web")[i // 2 % 2],
+                "ar": "110000",
+                "is_new": str(int(i % 3 == 0)),
+            },
+            "page": {"page_id": "home"},
+            "ts": t_s * 1000,
+        })
+
+    t0, day = 1704067200, 86_400  # 2024-01-01T00:00Z
+    days = [line(i, t0 + d * day + 2 * i) for d in (0, 1) for i in range(48)]
+    return [days] + [[line(100 + k, t0 + 4 * day + k)] for k in (0, 1)]
+
+
+def test_traffic_stream_graph_keeps_every_window_of_a_multi_day_backlog(
+    spark, tmp_path
+):
+    """A multi-day backlog reaches the UV boundary as one batch that the
+    UV hop writes as several files (one per state partition), each
+    spanning both days. Every closed-day DWS window must still be served,
+    equal to the batch computation: the DWS watermark must not pass rows
+    of the same upstream batch that are still unread."""
+    from realtime_datawarehouse_spark.operators import table_store as ts
+
+    log_batches = _log_backlog()
+    store = str(tmp_path / "store")
+    qs = pipelines.traffic_stream_graph(
+        spark,
+        _stream_of_lines(spark, tmp_path / "in", log_batches),
+        str(tmp_path / "work"),
+        store_path=store,
+    )
+    try:
+        for q in qs:  # topological order
+            q.processAllAvailable()
+    finally:
+        for q in qs:
+            q.stop()
+
+    closed = ("2024-01-01", "2024-01-02")
+    served = {
+        (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
+        for r in ts.read_state(spark, store).collect()
+        if r.stt[:10] in closed
+    }
+    want = {
+        w for w in _traffic_windows_batch(spark, sum(log_batches, []))
+        if w[0][:10] in closed
+    }
+    assert len(want) > 20
+    assert served == want
 
 
 def test_auto_buckets_rule_and_router_autosizing(spark, tmp_path):
