@@ -47,8 +47,8 @@ def parquet_stream(spark, path: str, schema: StructType) -> DataFrame:
     """File-based stream, one micro-batch per file — the test-rig stand-in
     for a raw Kafka topic, where each input file is one delivery; swap
     sources/kafka.read_stream in production wiring. Not for storage
-    boundaries between queries: those read every committed file per
-    trigger (streaming/pipelines.py ``_boundary``)."""
+    boundaries between queries: those are written and read by
+    streaming/pipelines.py ``_boundary``."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

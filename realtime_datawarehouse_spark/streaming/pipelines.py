@@ -13,7 +13,7 @@ PK-collapse on read (sources/kafka.latest_by_key).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 import os
@@ -22,7 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 
 from realtime_datawarehouse_spark.functions.compare import pround
-from realtime_datawarehouse_spark.operators import config_router, sinks, table_store
+from realtime_datawarehouse_spark.operators import config_router, table_store
 from realtime_datawarehouse_spark.sources import log_events, maxwell
 from realtime_datawarehouse_spark.streaming import jobs
 
@@ -2124,45 +2124,55 @@ def dws_traffic_channel_window(
 
 
 def _boundary(
-    spark: SparkSession, df: DataFrame, work_dir: str, name: str, n: int
+    df: DataFrame, work_dir: str, name: str, n: int, in_order: bool = False
 ):
     """One append storage boundary of a §3.4 column: start the query that
     writes ``df`` to ``{work_dir}/<name>`` (checkpoint ``{work_dir}/ck<n>``)
-    and return it with the downstream stream over that directory.
+    and return it with the downstream stream over that directory, read
+    with ``df``'s own schema.
 
-    The downstream reads with ``df``'s own schema and NO per-trigger file
-    cap: the file source lists the sink's ``_spark_metadata`` log, so each
-    trigger takes every committed file and upstream batches arrive whole.
-    A cap would split one upstream batch (one file per state partition,
-    each spanning the batch's event time) across triggers, and the first
-    file's event time would move a downstream watermark past rows still
-    unread, dropping them as late."""
+    By default each downstream trigger reads every committed file (the
+    file source lists the sink's ``_spark_metadata`` log), so upstream
+    batches arrive whole. A windowed consumer needs that: a stateful hop
+    writes one file per state partition, each spanning the batch's event
+    time, and reading one file first would move the window watermark past
+    rows still unread, dropping them as late.
+
+    ``in_order`` is for a consumer that keeps the first arrival per key
+    (``dropDuplicatesWithinWatermark``). A multi-file trigger scans its
+    files largest first, not in commit order, so a later batch's re-entry
+    could be kept over the earlier first visit. Such a boundary is written
+    one file per batch and read one file per trigger: each trigger is then
+    exactly one upstream batch, whole and in commit order."""
     path = os.path.join(work_dir, name)
     q = (
-        df.writeStream.format("parquet")
+        (df.coalesce(1) if in_order else df)
+        .writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", os.path.join(work_dir, f"ck{n}"))
         .outputMode("append")
         .start()
     )
-    return q, spark.readStream.schema(df.schema).parquet(path)
+    reader = df.sparkSession.readStream.schema(df.schema)
+    if in_order:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return q, reader.parquet(path)
 
 
 def _merge_sink(
-    df: DataFrame, work_dir: str, store_path: str, pk: Column, mode: str
+    df: DataFrame, work_dir: str, store_path: str, pk: str, mode: str
 ):
     """The last hop of a §3.4 column (checkpoint ``{work_dir}/ck3``): each
     micro-batch MERGEs into the versioned table store at ``store_path``
-    (sinks.upsert_sink) keyed by the ``pk`` column expression, stored as
-    column ``pk``; the batch id is the row version, so per key the row of
-    the latest batch wins."""
+    (``table_store.merge_upsert``) keyed by column ``pk``; the batch id is
+    the row version, so per key the row of the latest batch wins."""
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sinks.upsert_sink(
+        table_store.merge_upsert(
             batch_df.sparkSession,
-            batch_df.withColumns({"pk": pk, "ver": F.lit(batch_id)}),
+            batch_df.withColumn("ver", F.lit(batch_id)),
             store_path,
-            pk="pk",
+            pk=pk,
             version_col="ver",
         )
 
@@ -2175,7 +2185,6 @@ def _merge_sink(
 
 
 def traffic_stream_graph(
-    spark: SparkSession,
     raw: DataFrame,
     work_dir: str,
     store_path: str | None = None,
@@ -2192,35 +2201,38 @@ def traffic_stream_graph(
         → ``{store_path}`` (default ``{work_dir}/dws_traffic_channel``)
 
     Every boundary is replayable and keyed exactly like the reference's
-    intermediate Kafka topics, and each downstream query reads every
-    committed file per trigger (:func:`_boundary`); each query owns its
-    checkpoint, so any stage can crash/restart independently (the
-    file-source metadata log resumes where it stopped). Read the served
-    table with ``table_store.read_state``. Returns [q1, q2, q3]; drain with
+    intermediate Kafka topics (:func:`_boundary`): q2's UV dedup keeps the
+    first arrival, so it reads the page log one upstream batch per
+    trigger, in commit order; q3's window reads every committed UV file
+    per trigger. Each query owns its checkpoint, so any stage can
+    crash/restart independently (the file-source metadata log resumes
+    where it stopped). Read the served table with
+    ``table_store.read_state``. Returns [q1, q2, q3]; drain with
     ``q.processAllAvailable()`` in topological order.
     """
     store_path = store_path or os.path.join(work_dir, "dws_traffic_channel")
     q1, page = _boundary(
-        spark, dwd_log_split(raw)["page"], work_dir, "dwd_traffic_page_log", 1
+        dwd_log_split(raw)["page"], work_dir, "dwd_traffic_page_log", 1,
+        in_order=True,
     )
     q2, uv = _boundary(
-        spark, dwd_unique_visitor_detail(page), work_dir, "dwd_traffic_uv", 2
+        dwd_unique_visitor_detail(page), work_dir, "dwd_traffic_uv", 2
     )
     # injective composite PK: JSON keeps nulls and escapes separators, so
     # distinct dimension tuples can never collapse to one key (concat_ws
     # would drop NULL dims and collide on '|' in values)
-    pk = F.to_json(
-        F.struct("stt", "vc", "ch", "ar", "is_new"),
-        {"ignoreNullFields": "false"},
+    dws = dws_traffic_channel_window(uv).withColumn(
+        "pk",
+        F.to_json(
+            F.struct("stt", "vc", "ch", "ar", "is_new"),
+            {"ignoreNullFields": "false"},
+        ),
     )
-    q3 = _merge_sink(
-        dws_traffic_channel_window(uv), work_dir, store_path, pk, "append"
-    )
+    q3 = _merge_sink(dws, work_dir, store_path, "pk", "append")
     return [q1, q2, q3]
 
 
 def trade_stream_graph(
-    spark: SparkSession,
     raw: DataFrame,
     work_dir: str,
     store_path: str | None = None,
@@ -2240,29 +2252,29 @@ def trade_stream_graph(
         → ``{store_path}`` (default ``{work_dir}/ads_cart_daily``)
 
     Every boundary is replayable and keyed like the reference's
-    intermediate Kafka topics, and each downstream query reads every
-    committed file per trigger (:func:`_boundary`); each query owns its
-    checkpoint. The ADS stage runs in UPDATE mode — per batch, changed days
+    intermediate Kafka topics (:func:`_boundary`): q2's daily dedup keeps
+    the first arrival, so it reads the facts one upstream batch per
+    trigger, in commit order; q3 reads every committed UU-window file per
+    trigger. Each query owns its checkpoint. The ADS stage runs in UPDATE mode — per batch, changed days
     MERGE by PK ``dt`` into the store, so the served table always holds the
     latest rollup (K2's upsert contract instead of append windows).
     Returns [q1, q2, q3].
     """
     store_path = store_path or os.path.join(work_dir, "ads_cart_daily")
-    q1, facts = _boundary(spark, dwd_cart_add(raw), work_dir, "dwd_cart_add", 1)
-    q2, uu = _boundary(
-        spark, _cart_add_uu_windows(facts), work_dir, "dws_cart_uu", 2
+    q1, facts = _boundary(
+        dwd_cart_add(raw), work_dir, "dwd_cart_add", 1, in_order=True
     )
+    q2, uu = _boundary(_cart_add_uu_windows(facts), work_dir, "dws_cart_uu", 2)
     daily = (
         uu.select(F.substring("stt", 1, 10).alias("dt"), "cart_add_uu_ct")
         .groupBy("dt")
         .agg(F.sum("cart_add_uu_ct").alias("cart_add_uu"))
     )
-    q3 = _merge_sink(daily, work_dir, store_path, F.col("dt"), "update")
+    q3 = _merge_sink(daily, work_dir, store_path, "dt", "update")
     return [q1, q2, q3]
 
 
 def full_stream_topology(
-    spark: SparkSession,
     log_raw: DataFrame,
     db_raw: DataFrame,
     work_dir: str,
@@ -2286,13 +2298,11 @@ def full_stream_topology(
     share nothing but the store, whose optimistic commits serialize
     concurrent writers)."""
     traffic = traffic_stream_graph(
-        spark,
         log_raw,
         os.path.join(work_dir, "traffic"),
         store_path=os.path.join(store_root, "dws_traffic_channel"),
     )
     trade = trade_stream_graph(
-        spark,
         db_raw,
         os.path.join(work_dir, "trade"),
         store_path=os.path.join(store_root, "ads_cart_daily"),

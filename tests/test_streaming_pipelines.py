@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import shutil
 
 import pytest
 
@@ -14,8 +15,10 @@ def _stream_of_lines(spark, tmp_path, lines_batches):
     """Write each batch of (value: string) lines as one parquet file."""
     d = str(tmp_path)
     for batch in lines_batches:
-        spark.createDataFrame([(s,) for s in batch], "value string").coalesce(
-            1
+        # one slice, not coalesce(1): coalescing the default parallelism's
+        # Python slices into one task costs ~2 s per tiny file
+        spark.sparkContext.parallelize([(s,) for s in batch], 1).toDF(
+            "value string"
         ).write.mode("append").parquet(d)
     return spark.readStream.schema("value string").option(
         "maxFilesPerTrigger", 1
@@ -590,7 +593,7 @@ def test_traffic_stream_graph_three_hop_parity(spark, tmp_path):
         tmp_path / "in",
         [GRAPH_LINES_B1, GRAPH_LINES_B2] + GRAPH_HEARTBEATS,
     )
-    qs = pipelines.traffic_stream_graph(spark, raw, str(tmp_path / "graph"))
+    qs = pipelines.traffic_stream_graph(raw, str(tmp_path / "graph"))
     try:
         # drain in topological order: each stage consumes everything its
         # upstream committed before the next drain
@@ -639,7 +642,7 @@ def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
     )
     store = str(tmp_path / "store")
     cols = pipelines.full_stream_topology(
-        spark, log_raw, db_raw, str(tmp_path / "work"), store
+        log_raw, db_raw, str(tmp_path / "work"), store
     )
     qs = cols["traffic"] + cols["trade"]
     assert len(qs) == 6 and all(q.isActive for q in qs)
@@ -712,7 +715,7 @@ def test_full_stream_topology_restarts_from_checkpoints(spark, tmp_path):
 
     def run_pass(n_drains: int = 2):
         cols = pipelines.full_stream_topology(
-            spark, lines_stream(log_dir), lines_stream(db_dir), work, store
+            lines_stream(log_dir), lines_stream(db_dir), work, store
         )
         qs = cols["traffic"] + cols["trade"]
         try:
@@ -769,7 +772,7 @@ def test_trade_stream_graph_three_hop_parity(spark, tmp_path):
     )
     store = str(tmp_path / "ads_store")
     qs = pipelines.trade_stream_graph(
-        spark, raw, str(tmp_path / "graph"), store_path=store
+        raw, str(tmp_path / "graph"), store_path=store
     )
     try:
         for q in qs:
@@ -829,7 +832,6 @@ def test_traffic_stream_graph_keeps_every_window_of_a_multi_day_backlog(
     log_batches = _log_backlog()
     store = str(tmp_path / "store")
     qs = pipelines.traffic_stream_graph(
-        spark,
         _stream_of_lines(spark, tmp_path / "in", log_batches),
         str(tmp_path / "work"),
         store_path=store,
@@ -853,6 +855,138 @@ def test_traffic_stream_graph_keeps_every_window_of_a_multi_day_backlog(
     }
     assert len(want) > 20
     assert served == want
+
+
+# a later raw batch LARGER than the first: its boundary file sorts ahead
+# of the first batch's when one trigger reads both (the file scan packs
+# files largest first), so only a commit-ordered read keeps the first
+# visit. The padding rows are non-entry page views (dropped before the
+# UV dedup) and cart adds of users seen nowhere else.
+GRAPH_LINES_B2_LARGE = GRAPH_LINES_B2 + [
+    '{"common":{"mid":"m3","vc":"v2","ch":"app","ar":"120000","is_new":"0"},'
+    f'"page":{{"page_id":"good_list","last_page_id":"home"}},"ts":{t}}}'
+    for t in range(1704067214000, 1704067234000, 1000)
+]
+CART_LINES_B2_LARGE = CART_LINES_B2 + [
+    '{"database":"g","table":"cart_info","type":"insert","ts":"1704067215",'
+    f'"data":{{"id":"{50 + i}","user_id":"p{i}","sku_id":"s3","sku_num":"1"}}}}'
+    for i in range(20)
+]
+
+
+def _cart_uu_windows_batch(spark, lines):
+    """Cart-add UU windows over ``lines`` as one batch query: each user's
+    earliest cart add per day, counted per 10 s window, {stt: count}."""
+    from pyspark.sql import functions as F
+
+    from realtime_datawarehouse_spark.sources import maxwell as mx
+
+    env = mx.etl_filter(
+        mx.parse_envelope(
+            spark.createDataFrame([(s,) for s in lines], "value string")
+        )
+    ).where(F.col("table") == "cart_info")
+    firsts = (
+        mx.cart_add_delta(env, extra_cols=("ts",))
+        .select(
+            "user_id",
+            F.timestamp_seconds(F.col("ts").cast("long")).alias("t"),
+        )
+        .groupBy("user_id", F.to_date("t"))
+        .agg(F.min("t").alias("t"))
+    )
+    return {
+        r.stt: r.ct
+        for r in firsts.groupBy(F.window("t", "10 seconds"))
+        .agg(F.count("*").alias("ct"))
+        .select(
+            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
+            "ct",
+        )
+        .collect()
+    }
+
+
+def _replay_downstream(graph, raw, work, downstream):
+    """Run ``graph`` until q1 has committed every raw batch to its
+    boundary, drop q2's and q3's checkpoints and outputs (``downstream``),
+    then run it again and drain in topological order: the rebuilt q2
+    starts with every boundary file already committed, as a consumer
+    reset to the earliest offset of a retained topic does."""
+    qs = graph(raw, str(work))
+    for q in qs[1:]:
+        q.stop()
+    qs[0].processAllAvailable()
+    qs[0].stop()
+    for name in downstream:
+        shutil.rmtree(work / name, ignore_errors=True)
+    qs = graph(raw, str(work))
+    try:
+        for q in qs:
+            q.processAllAvailable()
+    finally:
+        for q in qs:
+            q.stop()
+
+
+def test_traffic_stream_graph_replay_keeps_first_entry_of_larger_batch(
+    spark, tmp_path
+):
+    """m2 enters at :01 (batch 1) and re-enters at :13 (batch 2, the
+    larger file). Replayed over a page log that already holds both
+    batches, the UV dedup must still keep the :01 visit, so the served
+    windows equal the batch computation's min-timestamp pick."""
+    from realtime_datawarehouse_spark.operators import table_store as ts
+
+    batches = [GRAPH_LINES_B1, GRAPH_LINES_B2_LARGE] + GRAPH_HEARTBEATS
+    work = tmp_path / "work"
+    _replay_downstream(
+        pipelines.traffic_stream_graph,
+        _stream_of_lines(spark, tmp_path / "in", batches),
+        work,
+        ("ck2", "ck3", "dwd_traffic_uv", "dws_traffic_channel"),
+    )
+    served = {
+        (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
+        for r in ts.read_state(spark, str(work / "dws_traffic_channel"))
+        .collect()
+        if r.stt.startswith("2024-01-01")
+    }
+    want = {
+        w for w in _traffic_windows_batch(spark, sum(batches, []))
+        if w[0].startswith("2024-01-01")
+    }
+    assert ("2024-01-01 00:00:00", "v1", "web", "110000", "0", 1) in want
+    assert served == want
+
+
+def test_trade_stream_graph_replay_keeps_first_cart_add_of_larger_batch(
+    spark, tmp_path
+):
+    """u1 adds at :00 (batch 1) and raises sku_num at :10 (batch 2, the
+    larger file). Replayed over a fact boundary that already holds both
+    batches, the daily dedup must still keep the :00 add, so the UU
+    windows on the dws_cart_uu boundary equal the batch computation's."""
+    batches = [CART_LINES_B1, CART_LINES_B2_LARGE] + CART_HEARTBEATS
+    work = tmp_path / "work"
+    _replay_downstream(
+        pipelines.trade_stream_graph,
+        _stream_of_lines(spark, tmp_path / "in", batches),
+        work,
+        ("ck2", "ck3", "dws_cart_uu", "ads_cart_daily"),
+    )
+    got = {
+        r.stt: r.cart_add_uu_ct
+        for r in spark.read.parquet(str(work / "dws_cart_uu")).collect()
+        if r.stt.startswith("2024-01-01")
+    }
+    want = {
+        stt: ct
+        for stt, ct in _cart_uu_windows_batch(spark, sum(batches, [])).items()
+        if stt.startswith("2024-01-01")
+    }
+    assert want["2024-01-01 00:00:00"] == 2  # u1 and u2
+    assert got == want
 
 
 def test_auto_buckets_rule_and_router_autosizing(spark, tmp_path):

@@ -6,11 +6,11 @@ micro-batch fixed overheads amortize so the three-hop streaming graph
 (log split → UV detail → channel DWS MERGE) scales with data, not with
 trigger count? Method: two corpora spanning the SAME two event-time
 hours (so window counts and watermark advances are identical) at 10×
-density, each as 4 files → 4 micro-batches at the raw source (the two
-downstream hops read every committed boundary file per trigger); the
-graph is drained twice in topological order (pass 2 lets stage N+1
-consume what stage N committed in pass 1) and the wall covers both
-passes. Distinct
+density, each as 4 files → 4 micro-batches at the raw source, and so at
+the UV hop, which reads the page log one upstream batch per trigger (the
+DWS hop reads every committed UV file per trigger); the graph is drained
+twice in topological order (pass 2 lets stage N+1 consume what stage N
+committed in pass 1) and the wall covers both passes. Distinct
 devices (UV state keys) also scale 10× — state growth is part of the
 law being measured. Emits one JSON line.
 """
@@ -94,7 +94,6 @@ def main() -> None:
                 .parquet(in_dir)
             )
             qs = pipelines.traffic_stream_graph(
-                spark,
                 raw,
                 os.path.join(work, f"wk_{n}"),
                 store_path=os.path.join(work, f"store_{n}"),
