@@ -233,8 +233,9 @@ def make_server(
                 _log.exception("GET %s failed", self.path)
                 self._reply(500, {"status": 1, "msg": "internal error"})
 
-        def log_message(self, *args) -> None:  # quiet test output
-            pass
+        def log_message(self, fmt: str, *args) -> None:
+            # the access log, at INFO: silent under the default WARNING level
+            _log.info("%s " + fmt, self.address_string(), *args)
 
     return ThreadingHTTPServer((host, port), Handler)
 

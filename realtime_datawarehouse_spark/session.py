@@ -20,9 +20,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# One shuffle partition per core on the test rig; on a real cluster this is
-# overridden (or left to AQE's coalescing with a high initial count).
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Cores for local mode, and one shuffle partition per core: $SPARK_GRAFT_CPUS,
+# else the cores this process may run on. On a real cluster the partition
+# count is overridden (or left to AQE's coalescing with a high initial count).
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 # InferFiltersFromGenerate synthesizes `size(e)>0 AND isnotnull(e)` below
 # every explode(e). When e is a COMPUTED array — this engine's hottest
@@ -63,14 +64,10 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .master(master or f"local[{CPUS}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or CPUS))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -83,8 +80,7 @@ def build_session(
 def tune_existing(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of our defaults to a session we did
     not build (the driver hands us one in ``__spark_entry__``)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    for k, v in (*_SQL_CONF, ("spark.sql.shuffle.partitions", cpus)):
+    for k, v in (*_SQL_CONF, ("spark.sql.shuffle.partitions", str(CPUS))):
         try:
             spark.conf.set(k, v)
         except Exception:

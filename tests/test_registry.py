@@ -11,6 +11,8 @@ import os
 
 from realtime_datawarehouse_spark.plans import registry
 
+pytest_plugins = ["pytester"]
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -123,40 +125,59 @@ def test_ledger_reads_rounds_in_numeric_order(tmp_path):
     assert registry.record_ledger(str(tmp_path))["q"] == (10, True)
 
 
-def test_drift_budget_scales_with_host_factor():
-    """VERDICT r12 item 1: the SLOW-TIER DRIFT budget is calibrated by a
-    measured per-session host factor, so a ~2x-degraded host (the judge's
-    r12 session) widens the budget instead of failing the suite."""
-    import pytest as _pytest
-
+def test_slow_tier_report_fixed_budget_and_exit_status(pytester):
+    """The slow-tier report lists every passed test outside SLOW_TESTS whose
+    call phase ran over the fixed 12 s budget — a bare or bracketed
+    SLOW_TESTS member never — and leaves the exit status alone. Call-phase
+    durations are planted by shifting pytest's clock inside each test."""
     from tests import conftest as cf
 
-    # injected 2x-degraded host -> budget doubles
-    assert cf.drift_budget_s(2.0) == _pytest.approx(
-        cf.SLOW_DRIFT_BUDGET_S * 2.0
+    assert cf.SLOW_DRIFT_BUDGET_S == 12.0
+    pytester.makepyfile(
+        """
+        import pytest
+        from _pytest import timing
+
+        @pytest.fixture
+        def took(monkeypatch):
+            def shift(s, real=timing.perf_counter):
+                monkeypatch.setattr(timing, "perf_counter", lambda: real() + s)
+            return shift
+
+        def test_new_and_slow(took):
+            took(12.0)  # plus the real call time: just over the budget
+
+        def test_new_under_budget(took):
+            took(11.0)
+
+        def test_layered_pipeline_end_to_end(took):
+            took(60.0)
+
+        @pytest.mark.parametrize("p", ["x"])
+        def test_cart_add_uu_pipeline(took, p):
+            took(60.0)
+
+        @pytest.mark.parametrize("backend", ["local"])
+        def test_two_concurrent_composed_loop_writers(took, backend):
+            took(60.0)
+        """
     )
-    # a fast host clamps at the base budget, never below it
-    assert cf.drift_budget_s(0.5) == _pytest.approx(cf.SLOW_DRIFT_BUDGET_S)
-    # the session's own measured factor is applied and respects the floor
-    assert cf.drift_budget_s() >= cf.SLOW_DRIFT_BUDGET_S
-    assert cf.drift_budget_s() == _pytest.approx(
-        cf.SLOW_DRIFT_BUDGET_S * max(1.0, cf.HOST_FACTOR)
-    )
 
+    class Hooks:  # every conftest hook but the tier switch's skips
+        pass
 
-def test_drift_breach_cohort_verdict():
-    """r13: a breach cohort of 1-2 fails the session (genuine membership
-    drift — new slow tests enter one commit at a time); >= 3 breaches in
-    ONE session is host pathology (a slow phase hits many tests at once,
-    r13 full run: six 2-6 s tests read 14-28 s) and must demote to a
-    warning so host noise cannot turn a passing suite red."""
-    from tests import conftest as cf
-
-    assert not cf.drift_breaches_fail_session(0)
-    assert cf.drift_breaches_fail_session(1)
-    assert cf.drift_breaches_fail_session(cf.DRIFT_PATHOLOGY_MIN - 1)
-    assert not cf.drift_breaches_fail_session(cf.DRIFT_PATHOLOGY_MIN)
-    assert not cf.drift_breaches_fail_session(cf.DRIFT_PATHOLOGY_MIN + 3)
+    for name in dir(cf):
+        if name.startswith("pytest_") and name != "pytest_collection_modifyitems":
+            setattr(Hooks, name, staticmethod(getattr(cf, name)))
+    result = pytester.runpytest_inprocess(plugins=[Hooks()])
+    result.assert_outcomes(passed=5)
+    assert result.ret == 0
+    lines = result.stdout.lines
+    section = [i for i, ln in enumerate(lines) if "SLOW-TIER DRIFT" in ln]
+    assert len(section) == 1
+    listed = [ln.split(":", 1)[0] for ln in lines[section[0] + 1 :]
+              if ln.startswith("test_")]
+    assert listed == ["test_new_and_slow"]
 
 
 def test_driver_budget_tier_switch():
@@ -177,3 +198,35 @@ def test_driver_budget_tier_switch():
     assert cf.FULL_SUITE == cf.full_suite_enabled(
         _os.environ.get("RDW_FULL_SUITE")
     )
+
+
+# Registered queries that do their real work while the query is BUILT
+# (store replays, trainers, refresh loops) and return a local DataFrame:
+# bench.py's timed noop save would measure a few local rows, so its
+# comments keep them out of the head.
+_EAGER_AT_BUILD = (
+    "mix_split_incremental_eval",
+    "ann_ivf_incremental_eval",
+    "text_bpe_train_scale_eval",
+    "pipeline_production_ingest_eval",
+    "text_classifier_train_eval",
+    "quality_refresh_eval",
+    "bpe_vocab_refresh_eval",
+    "pipeline_production_ingest_v3_eval",
+    "pipeline_loop_consistency_eval",
+)
+
+
+def test_bench_head_is_registered_floored_and_lazy():
+    """bench.BENCH_QUERIES: no duplicates, every name registered with a
+    BENCH_FLOOR.json entry, and none of the eager-at-build queries."""
+    import bench
+
+    head = bench.BENCH_QUERIES
+    assert len(set(head)) == len(head)
+    assert set(head) <= set(registry.get_queries())
+    with open(os.path.join(REPO, "BENCH_FLOOR.json"), encoding="utf-8") as f:
+        floor = json.load(f)["queries"]
+    assert [n for n in head if not floor.get(n)] == []
+    assert set(_EAGER_AT_BUILD) <= set(registry.get_queries())
+    assert set(head).isdisjoint(_EAGER_AT_BUILD)

@@ -42,6 +42,21 @@ def test_http_gmv_matches_direct_call(spark, ads_server):
     assert payload["data"] > 0
 
 
+def test_http_access_log_goes_to_module_logger(ads_server, caplog):
+    """Each request line and its status go to the module logger at INFO."""
+    import logging
+
+    with caplog.at_level(logging.INFO, logger=serving_http.__name__):
+        status, _ = _get(f"{ads_server}/gmv?date=20240101")
+    assert status == 200
+    lines = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == serving_http.__name__ and r.levelno == logging.INFO
+    ]
+    assert any('"GET /gmv?date=20240101 HTTP/1.1" 200' in m for m in lines), lines
+
+
 def test_http_province_payload_shape(spark, ads_server):
     date = (
         table(spark, SF_DIR, "orders")

@@ -11,18 +11,28 @@ import pytest
 from realtime_datawarehouse_spark.streaming import jobs, pipelines
 
 
+def _write_lines(spark, d, batch):
+    """Append one batch of (value: string) lines to ``d`` as one parquet file."""
+    # one slice, not coalesce(1): coalescing the default parallelism's
+    # Python slices into one task costs ~2 s per tiny file
+    spark.sparkContext.parallelize([(s,) for s in batch], 1).toDF(
+        "value string"
+    ).write.mode("append").parquet(d)
+
+
+def _lines_stream(spark, d):
+    """The lines under ``d`` as a stream, one file per trigger."""
+    return spark.readStream.schema("value string").option(
+        "maxFilesPerTrigger", 1
+    ).parquet(d)
+
+
 def _stream_of_lines(spark, tmp_path, lines_batches):
     """Write each batch of (value: string) lines as one parquet file."""
     d = str(tmp_path)
     for batch in lines_batches:
-        # one slice, not coalesce(1): coalescing the default parallelism's
-        # Python slices into one task costs ~2 s per tiny file
-        spark.sparkContext.parallelize([(s,) for s in batch], 1).toDF(
-            "value string"
-        ).write.mode("append").parquet(d)
-    return spark.readStream.schema("value string").option(
-        "maxFilesPerTrigger", 1
-    ).parquet(d)
+        _write_lines(spark, d, batch)
+    return _lines_stream(spark, d)
 
 
 CART_LINES_B1 = [
@@ -701,21 +711,10 @@ def test_full_stream_topology_restarts_from_checkpoints(spark, tmp_path):
     log_dir, db_dir = str(tmp_path / "in_log"), str(tmp_path / "in_db")
     work, store = str(tmp_path / "work"), str(tmp_path / "store")
 
-    def write_batch(d, batch):
-        spark.createDataFrame(
-            [(s,) for s in batch], "value string"
-        ).coalesce(1).write.mode("append").parquet(d)
-
-    def lines_stream(d):
-        return (
-            spark.readStream.schema("value string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-
     def run_pass(n_drains: int = 2):
         cols = pipelines.full_stream_topology(
-            lines_stream(log_dir), lines_stream(db_dir), work, store
+            _lines_stream(spark, log_dir), _lines_stream(spark, db_dir),
+            work, store,
         )
         qs = cols["traffic"] + cols["trade"]
         try:
@@ -728,15 +727,15 @@ def test_full_stream_topology_restarts_from_checkpoints(spark, tmp_path):
                 q.stop()
 
     # phase 1: only the first micro-batch of each column, then STOP
-    write_batch(log_dir, GRAPH_LINES_B1)
-    write_batch(db_dir, CART_LINES_B1)
+    _write_lines(spark, log_dir, GRAPH_LINES_B1)
+    _write_lines(spark, db_dir, CART_LINES_B1)
     run_pass()
 
     # phase 2: the rest arrives while the topology is DOWN; relaunch
     for b in [GRAPH_LINES_B2, *GRAPH_HEARTBEATS]:
-        write_batch(log_dir, b)
+        _write_lines(spark, log_dir, b)
     for b in [CART_LINES_B2, *CART_HEARTBEATS]:
-        write_batch(db_dir, b)
+        _write_lines(spark, db_dir, b)
     run_pass()
 
     # parity must equal the uninterrupted run's: traffic day-1 windows

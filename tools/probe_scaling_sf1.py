@@ -11,11 +11,9 @@ documents and embeddings with matched statistics; dimensions deliberately
 NOT scaled — the realistic regime), where per-query work is large enough
 for core count to matter.
 
-Methodology: bench.py's — noop sink, one cold save, best-of-3 warm saves,
-both calibration stamps (single-thread loop + warm 50M-row parallel
-range-sum) at start and end. Run once with SPARK_GRAFT_CPUS=32 and once
-with SPARK_GRAFT_CPUS=8 in separate processes, quiet-gated; the per-query
-32c/8c speedups go to SCALE.md.
+Methodology: bench.py's — noop sink, one cold save, best-of-3 warm saves.
+Run once with SPARK_GRAFT_CPUS=32 and once with SPARK_GRAFT_CPUS=8 in
+separate processes; the per-query 32c/8c speedups go to SCALE.md.
 
 Usage:
     SPARK_GRAFT_CPUS=32 python tools/probe_scaling_sf1.py > /tmp/scale32.json
@@ -31,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from realtime_datawarehouse_spark.plans import registry  # noqa: E402
-from realtime_datawarehouse_spark.session import build_session  # noqa: E402
+from realtime_datawarehouse_spark.session import CPUS, build_session  # noqa: E402
 
 SF1 = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -67,37 +65,18 @@ TOP20 = (
 )
 
 
-def _calib_py() -> float:
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(10_000_000):
-        s += i
-    return round(time.perf_counter() - t0, 3)
-
-
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(app_name=f"rdw-scale-sf1-{cpus}c")
+    spark = build_session(app_name=f"rdw-scale-sf1-{CPUS}c")
     spark.sparkContext.setLogLevel("ERROR")
-    rng = spark.range(50_000_000).selectExpr("sum(id) AS s")
-    rng.write.format("noop").mode("overwrite").save()
-
-    def _calib_spark() -> float:
-        t0 = time.perf_counter()
-        rng.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
     queries = registry.get_queries()
     out: dict = {
-        "cpus": int(cpus),
+        "cpus": CPUS,
         "sf": 1,
-        "calib_py_start": _calib_py(),
-        "calib_spark_start": _calib_spark(),
         "queries": {},
         "cold_queries": {},
     }
     for name in TOP20:
-        spark.sparkContext.setJobDescription(f"scale-sf1 {cpus}c: {name}")
+        spark.sparkContext.setJobDescription(f"scale-sf1 {CPUS}c: {name}")
         df = queries[name](spark, SF1)
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
@@ -109,8 +88,6 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         out["queries"][name] = round(best, 3)
         print(f"# {name}: {out['queries'][name]}", file=sys.stderr)
-    out["calib_py_end"] = _calib_py()
-    out["calib_spark_end"] = _calib_spark()
     out["total"] = round(sum(out["queries"].values()), 3)
     print(json.dumps(out))
 
