@@ -127,14 +127,6 @@ def zorder_key(cols: list, bits: int = 16):
     return key
 
 
-def write_zordered(
-    df: DataFrame, path: str, cols: list[str], bits: int = 16
-) -> None:
-    """Sort by the Morton key (range-partitioned sort → contiguous key
-    ranges per output file/row-group) and write."""
-    df.orderBy(zorder_key(cols, bits)).write.mode("overwrite").parquet(path)
-
-
 def compact(
     spark: SparkSession,
     path: str,

@@ -56,7 +56,3 @@ def upsert_sink(
     incoming = exclude_transient(df, transient_cols or [])
     table_store.merge_upsert(spark, incoming, path, pk, version_col)
 
-
-def console_sink(df: DataFrame, n: int = 20) -> None:
-    """K7 debug print sink (.print(\">>>\" ) analogs)."""
-    df.show(n, truncate=False)

@@ -359,10 +359,13 @@ def list_versions(path: str) -> list[str]:
 
 def _bucket_spec(path: str, pk: str, buckets: int | None) -> dict | None:
     """The table's bucketing contract, established atomically on first
-    bucketed merge (O_EXCL create of ``_BUCKETING``) and immutable after:
-    a later writer passing a different pk or bucket count is a caller
-    bug, not a race, and raises. Returns None for unbucketed tables."""
+    bucketed merge (create-with-content of ``_BUCKETING``: write a private
+    temp, then ``os.link`` it into place, so a concurrent reader never
+    sees the file before its JSON is written) and immutable after: a
+    later writer passing a different pk or bucket count is a caller bug,
+    not a race, and raises. Returns None for unbucketed tables."""
     import json
+    import threading
 
     meta = os.path.join(path, _BUCKETING)
     try:
@@ -383,10 +386,13 @@ def _bucket_spec(path: str, pk: str, buckets: int | None) -> dict | None:
         raise ValueError(f"buckets must be in [1, {_MAX_BUCKETS}]: {buckets}")
     os.makedirs(path, exist_ok=True)
     spec = {"pk": pk, "n": int(buckets)}
+    tmp = os.path.join(
+        path, f".{_BUCKETING}.{os.getpid()}.{threading.get_ident()}"
+    )
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(spec, f)
     try:
-        fd = os.open(meta, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(spec, f)
+        os.link(tmp, meta)
     except FileExistsError:  # concurrent first writers: first one wins
         with open(meta, encoding="utf-8") as f:
             racing = json.load(f)
@@ -396,6 +402,8 @@ def _bucket_spec(path: str, pk: str, buckets: int | None) -> dict | None:
                 f"{path}; this writer wanted {spec}"
             )
         spec = racing
+    finally:
+        os.unlink(tmp)
     return spec
 
 

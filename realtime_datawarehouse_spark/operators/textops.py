@@ -2636,7 +2636,7 @@ def bpe_train_rounds(
     r8 item 1). Production path: :func:`bpe_train`, which collects the
     (tiny, frequency-capped) word-frequency table once and runs the
     merge loop in-process — parity-pinned EXACTLY against this form at
-    n ∈ {8, 64} by tests/test_plans.py::test_bpe_train_matches_rounds.
+    n ∈ {8, 32} by tests/test_plans.py::test_bpe_train_matches_rounds.
 
     Per iteration: adjacent-pair counts are a map-combined aggregation
     over |vocab| symbol arrays; the winning pair (count desc, then
@@ -2715,7 +2715,7 @@ def _bpe_merge_loop(
     count-desc-then-lexicographic tie-break exactly (Python str
     comparison is code-point order == Spark's UTF8 binary order).
     Parity with the distributed round-per-merge form is EXACT and
-    test-pinned at n ∈ {8, 64} (tests/test_plans.py)."""
+    test-pinned at n ∈ {8, 32} (tests/test_plans.py)."""
     import heapq
 
     syms: list[list[str]] = [list(w) for w, _ in word_freqs]
@@ -2800,7 +2800,7 @@ def bpe_train(
     Semantics are IDENTICAL to ``bpe_train_rounds`` whenever the cap
     does not bind (count-desc/lexicographic tie-break, greedy
     left-to-right non-overlap application, early stop when no adjacent
-    pair remains) — pinned exactly at n ∈ {8, 64} plus the pure-Python
+    pair remains) — pinned exactly at n ∈ {8, 32} plus the pure-Python
     sequential reference (tests/test_plans.py). When the cap binds, the
     trainer learns from the ``max_words`` most frequent words — the
     standard frequency-capped practice; at 100 TB the dropped tail is

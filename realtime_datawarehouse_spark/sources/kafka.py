@@ -1,13 +1,15 @@
-"""Kafka source/sink builders (S1/S2, K1/K2).
+"""Kafka source builders (S1/S2) and the upsert-topic read contract (K2).
 
 Reference mechanics re-expressed:
 
 - S1 consumer with null-tolerant deserializer (rt/util/MyKafkaUtil.java:25-51):
   Spark's Kafka source never crashes on tombstones; we filter null values
   explicitly, which is the whole custom-deserializer story.
-- K1 exactly-once txn producer (MyKafkaUtil.java:54-69): Spark's Kafka sink
-  is at-least-once; end-to-end idempotence comes from PK-keyed writes +
-  MERGE on read (K2's upsert-Kafka contract — SURVEY.md §2.2 K2, §7.4 #8).
+- K1 exactly-once txn producer (MyKafkaUtil.java:54-69): there is no Kafka
+  sink builder; each topic hop of the stream topology is a checkpointed
+  file sink (streaming/pipelines.py ``_boundary``), and end-to-end
+  idempotence comes from PK-keyed MERGE writes (K2's upsert-Kafka
+  contract — SURVEY.md §2.2 K2, §7.4 #8).
 - K2 upsert topic: messages keyed by PK; readers collapse to
   last-value-per-key via ``latest_by_key`` (ST7's formulation).
 
@@ -61,31 +63,6 @@ def read_stream(
     return raw.where(F.col("value").isNotNull()).select(
         F.col("key").cast("string").alias("key"),
         F.col("value").cast("string").alias("value"),
-    )
-
-
-def write_stream(
-    df: DataFrame,
-    topic: str,
-    checkpoint: str,
-    bootstrap: str = DEFAULT_BOOTSTRAP,
-    key_col: str | None = None,
-):
-    """K1/K2: Kafka sink; pass ``key_col`` for PK-keyed (upsert-topic) writes."""
-    out = df
-    if key_col is not None:
-        out = df.withColumn("key", F.col(key_col).cast("string"))
-    out = out.select(
-        *(["key"] if key_col else []),
-        F.to_json(F.struct(*[c for c in df.columns if c != "key"])).alias(
-            "value"
-        ),
-    )
-    return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
     )
 
 

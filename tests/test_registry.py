@@ -11,8 +11,6 @@ import os
 
 from realtime_datawarehouse_spark.plans import registry
 
-pytest_plugins = ["pytester"]
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -123,81 +121,6 @@ def test_ledger_reads_rounds_in_numeric_order(tmp_path):
         json.dumps({"q": row_green})
     )
     assert registry.record_ledger(str(tmp_path))["q"] == (10, True)
-
-
-def test_slow_tier_report_fixed_budget_and_exit_status(pytester):
-    """The slow-tier report lists every passed test outside SLOW_TESTS whose
-    call phase ran over the fixed 12 s budget — a bare or bracketed
-    SLOW_TESTS member never — and leaves the exit status alone. Call-phase
-    durations are planted by shifting pytest's clock inside each test."""
-    from tests import conftest as cf
-
-    assert cf.SLOW_DRIFT_BUDGET_S == 12.0
-    pytester.makepyfile(
-        """
-        import pytest
-        from _pytest import timing
-
-        @pytest.fixture
-        def took(monkeypatch):
-            def shift(s, real=timing.perf_counter):
-                monkeypatch.setattr(timing, "perf_counter", lambda: real() + s)
-            return shift
-
-        def test_new_and_slow(took):
-            took(12.0)  # plus the real call time: just over the budget
-
-        def test_new_under_budget(took):
-            took(11.0)
-
-        def test_layered_pipeline_end_to_end(took):
-            took(60.0)
-
-        @pytest.mark.parametrize("p", ["x"])
-        def test_cart_add_uu_pipeline(took, p):
-            took(60.0)
-
-        @pytest.mark.parametrize("backend", ["local"])
-        def test_two_concurrent_composed_loop_writers(took, backend):
-            took(60.0)
-        """
-    )
-
-    class Hooks:  # every conftest hook but the tier switch's skips
-        pass
-
-    for name in dir(cf):
-        if name.startswith("pytest_") and name != "pytest_collection_modifyitems":
-            setattr(Hooks, name, staticmethod(getattr(cf, name)))
-    result = pytester.runpytest_inprocess(plugins=[Hooks()])
-    result.assert_outcomes(passed=5)
-    assert result.ret == 0
-    lines = result.stdout.lines
-    section = [i for i, ln in enumerate(lines) if "SLOW-TIER DRIFT" in ln]
-    assert len(section) == 1
-    listed = [ln.split(":", 1)[0] for ln in lines[section[0] + 1 :]
-              if ln.startswith("test_")]
-    assert listed == ["test_new_and_slow"]
-
-
-def test_driver_budget_tier_switch():
-    """r14 (VERDICT r13 item 1): the driver's budgeted `pytest tests/ -x -q`
-    sets no env, so the DEFAULT must be the quick tier — slow tests skipped,
-    suite completes inside the driver's budget. RDW_FULL_SUITE=1 (or any
-    non-"0" value) opts into the full tier locally."""
-    from tests import conftest as cf
-
-    assert not cf.full_suite_enabled(None)
-    assert not cf.full_suite_enabled("")
-    assert not cf.full_suite_enabled("0")
-    assert cf.full_suite_enabled("1")
-    assert cf.full_suite_enabled("yes")
-    # the session's own tier matches the env it was collected under
-    import os as _os
-
-    assert cf.FULL_SUITE == cf.full_suite_enabled(
-        _os.environ.get("RDW_FULL_SUITE")
-    )
 
 
 # Registered queries that do their real work while the query is BUILT

@@ -20,6 +20,28 @@ def _write_lines(spark, d, batch):
     ).write.mode("append").parquet(d)
 
 
+def _append_in_order(df, d):
+    """Append ``df`` to ``d`` as one parquet file, stamped one second after
+    the newest file already there. The file source takes its files in
+    modification-time order, so a stream reads them in write order
+    without the writer waiting for the clock to tick between files."""
+    import os
+
+    prior = {}
+    if os.path.isdir(d):
+        prior = {
+            f: os.path.getmtime(os.path.join(d, f))
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        }
+    df.coalesce(1).write.mode("append").parquet(d)
+    if prior:
+        stamp = max(prior.values()) + 1
+        for f in os.listdir(d):
+            if f.endswith(".parquet") and f not in prior:
+                os.utime(os.path.join(d, f), (stamp, stamp))
+
+
 def _lines_stream(spark, d):
     """The lines under ``d`` as a stream, one file per trigger."""
     return spark.readStream.schema("value string").option(
@@ -795,27 +817,35 @@ def test_trade_stream_graph_three_hop_parity(spark, tmp_path):
         assert uu <= want[dt]
 
 
+_T0, _DAY = 1704067200, 86_400  # 2024-01-01T00:00Z
+
+
+def _entry_line(i: int, t_s: int) -> str:
+    """A session-entry page view of mid ``m{i}`` at ``t_s`` (epoch s)."""
+    return json.dumps({
+        "common": {
+            "mid": f"m{i}",
+            "vc": f"v{i % 2}",
+            "ch": ("app", "web")[i // 2 % 2],
+            "ar": "110000",
+            "is_new": str(int(i % 3 == 0)),
+        },
+        "page": {"page_id": "home"},
+        "ts": t_s * 1000,
+    })
+
+
 def _log_backlog():
     """One raw file of session entries for 48 mids × 2 days (2 s apart, so
     10 windows a day holding 1-2 mids per dimension combination), then two
     heartbeat files with distinct mids 3 days after the last day."""
-
-    def line(i: int, t_s: int) -> str:
-        return json.dumps({
-            "common": {
-                "mid": f"m{i}",
-                "vc": f"v{i % 2}",
-                "ch": ("app", "web")[i // 2 % 2],
-                "ar": "110000",
-                "is_new": str(int(i % 3 == 0)),
-            },
-            "page": {"page_id": "home"},
-            "ts": t_s * 1000,
-        })
-
-    t0, day = 1704067200, 86_400  # 2024-01-01T00:00Z
-    days = [line(i, t0 + d * day + 2 * i) for d in (0, 1) for i in range(48)]
-    return [days] + [[line(100 + k, t0 + 4 * day + k)] for k in (0, 1)]
+    days = [
+        _entry_line(i, _T0 + d * _DAY + 2 * i)
+        for d in (0, 1) for i in range(48)
+    ]
+    return [days] + [
+        [_entry_line(100 + k, _T0 + 4 * _DAY + k)] for k in (0, 1)
+    ]
 
 
 def test_traffic_stream_graph_keeps_every_window_of_a_multi_day_backlog(
@@ -854,6 +884,130 @@ def test_traffic_stream_graph_keeps_every_window_of_a_multi_day_backlog(
     }
     assert len(want) > 20
     assert served == want
+
+
+def _crash_batches():
+    """Raw traffic files for the crash tests, fed one at a time: day-1
+    entries of mids 0-47; day-1 re-entries of mids 12-23, which the UV
+    hop's dedup state must drop, with day-2 entries of all 48 mids; then
+    a heartbeat 3 days later that closes both days."""
+    return [
+        [_entry_line(i, _T0 + 2 * i) for i in range(48)],
+        [_entry_line(i, _T0 + 100 + 2 * i) for i in range(12, 24)]
+        + [_entry_line(i, _T0 + _DAY + 2 * i) for i in range(48)],
+        [_entry_line(100, _T0 + 4 * _DAY)],
+    ]
+
+
+def _feed_traffic_column(spark, tmp_path, batches):
+    """Run the traffic column over ``tmp_path/in`` from its checkpoints
+    under ``tmp_path/work``, serving ``tmp_path/store``. Each batch lands
+    as one raw file, and all three hops drain in topological order before
+    the next one, so every batch reaches the last hop on its own. The
+    column starts once the first file exists (a file stream needs its
+    directory). The queries stop on return and on a hop's failure, which
+    propagates."""
+    raw = str(tmp_path / "in")
+    qs = []
+    try:
+        for batch in batches:
+            _write_lines(spark, raw, batch)
+            qs = qs or pipelines.traffic_stream_graph(
+                _lines_stream(spark, raw),
+                str(tmp_path / "work"),
+                store_path=str(tmp_path / "store"),
+            )
+            for q in qs:
+                q.processAllAvailable()
+    finally:
+        for q in qs:
+            q.stop()
+
+
+def _fed_files(tmp_path) -> int:
+    return len(list((tmp_path / "in").glob("*.parquet")))
+
+
+def _assert_serves_uninterrupted_result(spark, tmp_path, batches):
+    """The served store holds each closed-day window of the uninterrupted
+    run exactly once: the batch computation over every line, which the
+    parity tests above pin to the uninterrupted stream."""
+    from realtime_datawarehouse_spark.operators import table_store as ts
+
+    closed = ("2024-01-01", "2024-01-02")
+    served = sorted(
+        (r.stt, r.vc, r.ch, r.ar, r.is_new, r.uv_ct)
+        for r in ts.read_state(spark, str(tmp_path / "store")).collect()
+        if r.stt[:10] in closed
+    )
+    want = sorted(
+        w for w in _traffic_windows_batch(spark, sum(batches, []))
+        if w[0][:10] in closed
+    )
+    assert len(want) > 20
+    assert served == want
+
+
+def test_traffic_column_recovers_from_a_crash_after_the_merge_commit(
+    spark, tmp_path, monkeypatch
+):
+    """The last hop crashes just after ``table_store.merge_upsert``
+    committed a batch that served day-2 windows, before Spark logged the
+    batch as done. Restarted from its checkpoints, the column replays that
+    batch with the same version, and the store still serves each window
+    once: the MERGE by key absorbs the replay."""
+    from pyspark.errors import StreamingQueryException
+
+    from realtime_datawarehouse_spark.operators import table_store as ts
+
+    real_merge = ts.merge_upsert
+
+    def merge_then_crash(spark, incoming, path, **kw):
+        version = real_merge(spark, incoming, path, **kw)
+        day2 = ts.read_state(spark, path).where("stt LIKE '2024-01-02%'")
+        if not day2.isEmpty():
+            raise RuntimeError("planted crash after the merge commit")
+        return version
+
+    batches = _crash_batches()
+    monkeypatch.setattr(ts, "merge_upsert", merge_then_crash)
+    with pytest.raises(StreamingQueryException, match="planted crash"):
+        _feed_traffic_column(spark, tmp_path, batches)
+    monkeypatch.undo()
+
+    _feed_traffic_column(spark, tmp_path, batches[_fed_files(tmp_path):])
+    _assert_serves_uninterrupted_result(spark, tmp_path, batches)
+
+
+def test_traffic_column_recovers_from_a_task_failure_in_the_uv_hop(
+    spark, tmp_path, monkeypatch
+):
+    """A task of the UV hop fails mid-batch, on the batch that carries
+    day-1 re-entries and day 2, after the dedup state holds day 1.
+    Restarted from its checkpoints, the column reruns that batch from the
+    last committed state: the re-entries are still dropped and the store
+    serves exactly the uninterrupted result."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    real_uv = pipelines.dwd_unique_visitor_detail
+
+    def uv_with_task_failure(page):
+        fail = (F.col("mid") == "m30") & (F.col("visit_date") == "2024-01-02")
+        return real_uv(page).where(
+            F.when(fail, F.raise_error(F.lit("planted task failure")))
+            .otherwise(F.lit(True))
+        )
+
+    batches = _crash_batches()
+    monkeypatch.setattr(pipelines, "dwd_unique_visitor_detail", uv_with_task_failure)
+    with pytest.raises(StreamingQueryException, match="planted task failure"):
+        _feed_traffic_column(spark, tmp_path, batches)
+    monkeypatch.undo()
+    assert _fed_files(tmp_path) == 2  # the failure hit the day-2 batch
+
+    _feed_traffic_column(spark, tmp_path, batches[2:])
+    _assert_serves_uninterrupted_result(spark, tmp_path, batches)
 
 
 # a later raw batch LARGER than the first: its boundary file sorts ahead
@@ -1066,7 +1220,6 @@ def test_streaming_incremental_dedup_loop_parity(spark, tmp_path):
     3 would see batches 1+2 as corpus). Also pins the bootstrap case:
     batch 1 (empty corpus) produces no flags."""
     import os
-    import time
 
     from realtime_datawarehouse_spark.operators import dedup, table_store
     from realtime_datawarehouse_spark.streaming import pipelines
@@ -1076,11 +1229,8 @@ def test_streaming_incremental_dedup_loop_parity(spark, tmp_path):
     docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
     is_batch = "doc_id % 10 = 7"
     in_dir = str(tmp_path / "in")
-    docs.where(f"NOT ({is_batch})").coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    time.sleep(1.1)  # file source orders micro-batches by mod time
-    docs.where(is_batch).coalesce(1).write.mode("append").parquet(in_dir)
+    _append_in_order(docs.where(f"NOT ({is_batch})"), in_dir)
+    _append_in_order(docs.where(is_batch), in_dir)
 
     sig_path = str(tmp_path / "sigs")
     flags_path = str(tmp_path / "flags")
@@ -1234,8 +1384,6 @@ def test_streaming_split_assignments_track_batch_cc(spark, tmp_path):
     including a component that merges two prior multi-member components
     (and their splits) when a bridge document arrives in batch 3, which
     must resolve deterministically to the min member's hash."""
-    import time
-
     from pyspark.sql import functions as F
 
     from realtime_datawarehouse_spark.operators import table_store, textops
@@ -1250,8 +1398,7 @@ def test_streaming_split_assignments_track_batch_cc(spark, tmp_path):
         batch = fixture.where(f"doc_id % 3 = {i}").unionByName(
             spark.createDataFrame(planted[i], "doc_id long, text string")
         )
-        batch.coalesce(1).write.mode("append").parquet(in_dir)
-        time.sleep(1.1)  # file source orders micro-batches by mod time
+        _append_in_order(batch, in_dir)
 
     sig_path = str(tmp_path / "sigs")
     flags_path = str(tmp_path / "flags")
@@ -1323,7 +1470,7 @@ def dedup_cc_per(spark, docs):
 def test_incremental_split_maintenance_stepwise_parity(spark, tmp_path):
     """The cumulative invariant, pinned after EVERY step (not just the
     end state): doc → component equals the batch CC over everything
-    ingested so far, at each of 4 ingests — plus replay idempotency
+    ingested so far, at each of 3 ingests — plus replay idempotency
     (re-running a step's maintenance with the same batch_id leaves the
     table byte-identical)."""
     from pyspark.sql import functions as F
@@ -1339,8 +1486,8 @@ def test_incremental_split_maintenance_stepwise_parity(spark, tmp_path):
     comp_path = str(tmp_path / "comps")
     seen = None
     merged_late = False
-    for i in range(4):
-        batch = fixture.where(f"doc_id % 4 = {i}")
+    for i in range(3):
+        batch = fixture.where(f"doc_id % 3 = {i}")
         if i in planted:
             batch = batch.unionByName(
                 spark.createDataFrame(
@@ -1471,21 +1618,14 @@ def test_hot_band_spanning_pairs_bound_and_cc_parity(spark, tmp_path):
     assert got[1000 + n_batch - 1] == 0 and got[2000] == 2000
 
 
-def test_production_ingest_bucketed_matches_flat(spark, tmp_path):
-    """Round 10 (extended round 12 to the 7-table loop): the composed
-    loop's standing tables — sigs/flags/comps/ivf/quality PLUS the
-    round-12 BPE encodings — merged with ``buckets=4`` (touched-bucket
-    rewrite + hardlinks, the O(batch) deployment layout) must end
-    row-identical to the flat O(table) layout across a multi-batch
-    history INCLUDING a replayed batch — bucket-local last-write-wins
-    is the same merge, just partitioned."""
-    from pyspark.sql import functions as F  # noqa: F401
+def _sf_loop_inputs(spark):
+    """The SF_DIR corpus as the 7-table composed loop ingests it, in three
+    doc_id-mod-3 batches: the joined rows, the IVF centroids and the
+    16-merge day-0 vocab trained on the full corpus (so every batch is
+    warm)."""
+    from pyspark.sql import functions as F
 
-    from realtime_datawarehouse_spark.operators import (
-        similarity,
-        table_store,
-        textops,
-    )
+    from realtime_datawarehouse_spark.operators import similarity, textops
     from realtime_datawarehouse_spark.streaming import pipelines
     from realtime_datawarehouse_spark.tables import table
     from tests.conftest import SF_DIR
@@ -1495,49 +1635,87 @@ def test_production_ingest_bucketed_matches_flat(spark, tmp_path):
     joined = docs.join(emb, docs.doc_id == emb.vec_id, "left").select(
         "doc_id", "text", "embedding"
     )
-    centroids = similarity._ivf_centroids(emb)
     m0 = [
         (r.left, r.right)
         for r in textops.bpe_train(docs, 16).orderBy("step").collect()
     ]
-    r0 = pipelines._bpe_ratio_milli(textops.bpe_encode_vocab(docs, merges=m0))
+    return {
+        "docs": docs,
+        "emb": emb,
+        "joined": joined,
+        "batches": [
+            joined.where(F.pmod(F.col("doc_id"), F.lit(3)) == i)
+            for i in range(3)
+        ],
+        "centroids": similarity._ivf_centroids(emb),
+        "m0": m0,
+        "r0": pipelines._bpe_ratio_milli(
+            textops.bpe_encode_vocab(docs, merges=m0)
+        ),
+    }
 
-    def run(root, buckets):
-        paths = tuple(
-            f"{root}/{t}" for t in ("sigs", "flags", "comps", "ivf")
+
+def _sf_loop_step(spark, inp, root, i, buckets=None):
+    """Batch ``i`` of _sf_loop_inputs through production_ingest_step into
+    the seven standing tables under ``root``."""
+    from realtime_datawarehouse_spark.streaming import pipelines
+
+    pipelines.production_ingest_step(
+        spark, inp["batches"][i], inp["centroids"],
+        f"{root}/sigs", f"{root}/flags", f"{root}/comps", f"{root}/ivf",
+        batch_id=i, quality_path=f"{root}/quality",
+        bpe_vocab_path=f"{root}/vocab", bpe_enc_path=f"{root}/enc",
+        buckets=buckets,
+    )
+
+
+@pytest.fixture(scope="module")
+def sf_loop_flat_replay(spark, tmp_path_factory):
+    """One uninterrupted flat-layout step replay of _sf_loop_inputs,
+    shared by the stream and the bucketed-layout comparisons: (inputs,
+    root of its tables)."""
+    from realtime_datawarehouse_spark.streaming import pipelines
+
+    inp = _sf_loop_inputs(spark)
+    root = str(tmp_path_factory.mktemp("sf_loop_flat"))
+    pipelines.install_bpe_vocab(spark, f"{root}/vocab", inp["m0"], 0, inp["r0"])
+    for i in range(3):
+        _sf_loop_step(spark, inp, root, i)
+    return inp, root
+
+
+def test_production_ingest_bucketed_matches_flat(
+    spark, tmp_path, sf_loop_flat_replay
+):
+    """Round 10 (extended round 12 to the 7-table loop): the composed
+    loop's standing tables — sigs/flags/comps/ivf/quality PLUS the
+    round-12 BPE encodings — merged with ``buckets=4`` (touched-bucket
+    rewrite + hardlinks, the O(batch) deployment layout) across a
+    multi-batch history INCLUDING a replayed batch must end
+    row-identical to the uninterrupted flat O(table) layout —
+    bucket-local last-write-wins is the same merge, just partitioned,
+    and the replay changes nothing."""
+    from realtime_datawarehouse_spark.operators import table_store
+    from realtime_datawarehouse_spark.streaming import pipelines
+
+    inp, flat = sf_loop_flat_replay
+    bk = str(tmp_path / "bk")
+    pipelines.install_bpe_vocab(spark, f"{bk}/vocab", inp["m0"], 0, inp["r0"])
+    for i in range(3):
+        _sf_loop_step(spark, inp, bk, i, buckets=4)
+        if i == 1:  # crash-replay mid-history
+            _sf_loop_step(spark, inp, bk, i, buckets=4)
+
+    for t in ("sigs", "flags", "comps", "ivf", "quality", "enc"):
+        flat_rows, bk_rows = (
+            sorted(
+                tuple(r)
+                for r in table_store.read_state(spark, f"{root}/{t}")
+                .drop("ver").collect()
+            )
+            for root in (flat, bk)
         )
-        pipelines.install_bpe_vocab(spark, f"{root}/vocab", m0, 0, r0)
-
-        def step(i):
-            pipelines.production_ingest_step(
-                spark,
-                joined.where(F.pmod(F.col("doc_id"), F.lit(3)) == i),
-                centroids,
-                *paths,
-                batch_id=i,
-                quality_path=f"{root}/quality",
-                bpe_vocab_path=f"{root}/vocab",
-                bpe_enc_path=f"{root}/enc",
-                buckets=buckets,
-            )
-
-        for i in range(3):
-            step(i)
-            if i == 1:  # crash-replay mid-history
-                step(i)
-        out = {}
-        for p in paths + (f"{root}/quality", f"{root}/enc"):
-            df = table_store.read_state(spark, p).drop("ver")
-            out[p.rsplit("/", 1)[-1]] = sorted(
-                tuple(r) for r in df.collect()
-            )
-        return out
-
-    flat = run(str(tmp_path / "flat"), None)
-    bucketed = run(str(tmp_path / "bk"), 4)
-    assert set(flat) == set(bucketed)
-    for t in flat:
-        assert flat[t] == bucketed[t], f"table {t} diverged"
+        assert flat_rows == bk_rows, f"table {t} diverged"
 
 
 def test_ivf_refresh_policy_triggers_on_planted_drift_only(spark, tmp_path):
@@ -1680,15 +1858,15 @@ def test_ivf_refresh_on_bucketed_index_then_merge_rebuckets(spark, tmp_path):
     assert got == want
 
 
-def test_production_corpus_pipeline_stream_matches_replay(spark, tmp_path):
+def test_production_corpus_pipeline_stream_matches_replay(
+    spark, tmp_path, sf_loop_flat_replay
+):
     """VERDICT r8 item 5, the stream side: running the COMPOSED loop as a
     real foreachBatch stream produces byte-identical end states to the
     step replay the registered eval runs (shared step function), and
     each standing table equals its independent batch form — flags ≡
     per-stage incremental_flags_vs_signatures, components ≡ batch CC,
     IVF lists ≡ ivf_assign over the full corpus."""
-    import time
-
     from pyspark.sql import functions as F
 
     from realtime_datawarehouse_spark.operators import (
@@ -1697,34 +1875,21 @@ def test_production_corpus_pipeline_stream_matches_replay(spark, tmp_path):
         table_store,
     )
     from realtime_datawarehouse_spark.streaming import pipelines
-    from realtime_datawarehouse_spark.tables import table
-    from tests.conftest import SF_DIR
 
     from realtime_datawarehouse_spark.operators import textops as _to
 
-    docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
-    emb = table(spark, SF_DIR, "embeddings")
-    joined = docs.join(emb, docs.doc_id == emb.vec_id, "left").select(
-        "doc_id", "text", "embedding"
-    )
-    centroids = similarity._ivf_centroids(emb)
+    inp, r = sf_loop_flat_replay
+    docs, emb, joined = inp["docs"], inp["emb"], inp["joined"]
+    centroids, m0, r0 = inp["centroids"], inp["m0"], inp["r0"]
     n_batches = 3
     # round 12: the 6th/7th standing tables ride the same stream —
     # day-0 vocab trained on the full corpus, so every batch is warm
     # (the firing-refresh stream twin is
     # test_v3_stream_matches_replay_through_all_three_refreshes)
-    m0 = [
-        (r_.left, r_.right)
-        for r_ in _to.bpe_train(docs, 16).orderBy("step").collect()
-    ]
-    r0 = pipelines._bpe_ratio_milli(_to.bpe_encode_vocab(docs, merges=m0))
 
     in_dir = str(tmp_path / "in")
-    for i in range(n_batches):
-        joined.where(
-            F.pmod(F.col("doc_id"), F.lit(n_batches)) == i
-        ).coalesce(1).write.mode("append").parquet(in_dir)
-        time.sleep(1.1)  # file source orders micro-batches by mod time
+    for b in inp["batches"]:
+        _append_in_order(b, in_dir)
 
     s = str(tmp_path / "stream")
     pipelines.install_bpe_vocab(spark, f"{s}/vocab", m0, 0, r0)
@@ -1747,18 +1912,6 @@ def test_production_corpus_pipeline_stream_matches_replay(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
-
-    r = str(tmp_path / "replay")
-    pipelines.install_bpe_vocab(spark, f"{r}/vocab", m0, 0, r0)
-    for i in range(n_batches):
-        pipelines.production_ingest_step(
-            spark,
-            joined.where(F.pmod(F.col("doc_id"), F.lit(n_batches)) == i),
-            centroids,
-            f"{r}/sigs", f"{r}/flags", f"{r}/comps", f"{r}/ivf",
-            batch_id=i, quality_path=f"{r}/quality",
-            bpe_vocab_path=f"{r}/vocab", bpe_enc_path=f"{r}/enc",
-        )
 
     def snap(path, cols):
         df = table_store.read_state(spark, path)
@@ -1822,24 +1975,16 @@ def test_production_corpus_pipeline_stream_matches_replay(spark, tmp_path):
     )
 
 
-def test_v3_stream_matches_replay_through_all_three_refreshes(
-    spark, tmp_path
-):
-    """Round 12 interplay pin for the 7-table composed loop: a REAL
-    foreachBatch stream and the direct step replay must end
-    byte-identical across a history in which ALL THREE measure→act
-    policies FIRE mid-run — the vocab-ratio trigger at batch 2 (drifted
-    text retrains + installs v2), and the quality-PSI + IVF-imbalance
-    triggers at the batch-3 cadence point (both model swaps are
-    conditional commits inside the same foreachBatch). The providers
-    are fixed deterministic frames, so stream and replay retrain on
-    identical corpora."""
-    import time
-
+def _v3_history(spark):
+    """The 7-table loop history in which ALL THREE measure→act policies
+    fire: the vocab-ratio trigger at batch 2 (drifted text retrains and
+    installs v2), and the quality-PSI and IVF-imbalance triggers at the
+    batch-3 cadence point. The providers are fixed deterministic frames,
+    so every run of it retrains on identical corpora."""
     from pyspark.sql import functions as F
 
     from realtime_datawarehouse_spark.functions.vector import l2_norm
-    from realtime_datawarehouse_spark.operators import table_store, textops
+    from realtime_datawarehouse_spark.operators import textops
     from realtime_datawarehouse_spark.streaming import pipelines
 
     def cb(rows):
@@ -1877,7 +2022,6 @@ def test_v3_stream_matches_replay_through_all_three_refreshes(
         all_df.where((F.col("doc_id") >= 108) & (F.col("doc_id") < 116)),
         all_df.where(F.col("doc_id") >= 116),
     ]
-    stale_cb = cb([(i, basis(i)) for i in range(8)])
     split_cb = cb(
         [(i, hot(8 + i)) for i in range(7)] + [(7, basis(4))]
     )
@@ -1893,47 +2037,106 @@ def test_v3_stream_matches_replay_through_all_three_refreshes(
         (r.left, r.right)
         for r in textops.bpe_train(docs0, 4).orderBy("step").collect()
     ]
-    r0 = pipelines._bpe_ratio_milli(
-        textops.bpe_encode_vocab(docs0, merges=m0)
+    return {
+        "all_df": all_df,
+        "batches": batches,
+        "stale_cb": cb([(i, basis(i)) for i in range(8)]),
+        "docs0": docs0,
+        "stale_w": stale_w,
+        "m0": m0,
+        "r0": pipelines._bpe_ratio_milli(
+            textops.bpe_encode_vocab(docs0, merges=m0)
+        ),
+        "knobs": dict(
+            quality_weights=stale_w,
+            quality_refresh_every=3,
+            quality_corpus_provider=lambda s: q_corpus,
+            quality_refresh_weights_provider=lambda s: fresh_w,
+            ivf_refresh_every=3,
+            ivf_refresh_centroids_provider=lambda s: split_cb,
+            bpe_corpus_provider=lambda s: bpe_corpus,
+        ),
+    }
+
+
+def _v3_paths(root):
+    return {
+        n: f"{root}/{n}"
+        for n in ("sigs", "flags", "comps", "ivf", "quality", "vocab", "enc")
+    }
+
+
+def _v3_day0(spark, h, p, buckets=None):
+    """Day 0 of the v3 history at paths ``p``: the 4-merge vocab v0 and
+    the stale quality model over batch 0's docs."""
+    from realtime_datawarehouse_spark.streaming import pipelines
+
+    pipelines.install_bpe_vocab(spark, p["vocab"], h["m0"], 0, h["r0"])
+    pipelines.ingest_quality_step(
+        spark, h["docs0"], p["quality"], 0, weights=h["stale_w"],
+        buckets=buckets,
     )
-    knobs = dict(
-        quality_weights=stale_w,
-        quality_refresh_every=3,
-        quality_corpus_provider=lambda s: q_corpus,
-        quality_refresh_weights_provider=lambda s: fresh_w,
-        ivf_refresh_every=3,
-        ivf_refresh_centroids_provider=lambda s: split_cb,
-        bpe_corpus_provider=lambda s: bpe_corpus,
+    pipelines.refresh_quality_model(
+        spark, p["quality"], h["docs0"], refresh_id=0,
+        new_weights=h["stale_w"],
     )
 
-    def day0(root):
-        pipelines.install_bpe_vocab(spark, f"{root}/vocab", m0, 0, r0)
-        pipelines.ingest_quality_step(
-            spark, docs0, f"{root}/quality", 0, weights=stale_w
-        )
-        pipelines.refresh_quality_model(
-            spark, f"{root}/quality", docs0, refresh_id=0,
-            new_weights=stale_w,
-        )
 
+def _v3_replay(spark, h, root, buckets=None):
+    """The direct step replay of the v3 history under ``root``; returns
+    its table paths."""
+    from realtime_datawarehouse_spark.streaming import pipelines
+
+    p = _v3_paths(root)
+    _v3_day0(spark, h, p, buckets)
+    for i, b in enumerate(h["batches"]):
+        pipelines.production_ingest_step(
+            spark, b, h["stale_cb"],
+            p["sigs"], p["flags"], p["comps"], p["ivf"],
+            batch_id=i, quality_path=p["quality"],
+            bpe_vocab_path=p["vocab"], bpe_enc_path=p["enc"],
+            buckets=buckets, **h["knobs"],
+        )
+    return p
+
+
+@pytest.fixture(scope="module")
+def v3_flat_replay(spark, tmp_path_factory):
+    """One flat-layout replay of the v3 history, shared by the stream and
+    the bucketed-layout comparisons: (history, table paths)."""
+    h = _v3_history(spark)
+    return h, _v3_replay(spark, h, str(tmp_path_factory.mktemp("v3_flat")))
+
+
+def test_v3_stream_matches_replay_through_all_three_refreshes(
+    spark, tmp_path, v3_flat_replay
+):
+    """Round 12 interplay pin for the 7-table composed loop: a REAL
+    foreachBatch stream and the direct step replay must end
+    byte-identical across a history in which ALL THREE measure→act
+    policies FIRE mid-run (_v3_history) — both model swaps are
+    conditional commits inside the same foreachBatch."""
+    from realtime_datawarehouse_spark.operators import table_store
+    from realtime_datawarehouse_spark.streaming import pipelines
+
+    h, r = v3_flat_replay
     in_dir = str(tmp_path / "in")
-    for b in batches:
-        b.coalesce(1).write.mode("append").parquet(in_dir)
-        time.sleep(1.1)
+    for b in h["batches"]:
+        _append_in_order(b, in_dir)
 
-    s = str(tmp_path / "stream")
-    day0(s)
+    s = _v3_paths(str(tmp_path / "stream"))
+    _v3_day0(spark, h, s)
     stream = (
-        spark.readStream.schema(all_df.schema)
+        spark.readStream.schema(h["all_df"].schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
     q = (
         pipelines.production_corpus_pipeline(
-            stream, stale_cb, f"{s}/sigs", f"{s}/flags", f"{s}/comps",
-            f"{s}/ivf", quality_path=f"{s}/quality",
-            bpe_vocab_path=f"{s}/vocab", bpe_enc_path=f"{s}/enc",
-            **knobs,
+            stream, h["stale_cb"], s["sigs"], s["flags"], s["comps"],
+            s["ivf"], quality_path=s["quality"],
+            bpe_vocab_path=s["vocab"], bpe_enc_path=s["enc"],
+            **h["knobs"],
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -1941,41 +2144,30 @@ def test_v3_stream_matches_replay_through_all_three_refreshes(
     )
     q.awaitTermination()
 
-    r = str(tmp_path / "replay")
-    day0(r)
-    for i, b in enumerate(batches):
-        pipelines.production_ingest_step(
-            spark, b, stale_cb,
-            f"{r}/sigs", f"{r}/flags", f"{r}/comps", f"{r}/ivf",
-            batch_id=i, quality_path=f"{r}/quality",
-            bpe_vocab_path=f"{r}/vocab", bpe_enc_path=f"{r}/enc",
-            **knobs,
-        )
-
     for t in ("sigs", "flags", "comps", "ivf", "quality", "vocab", "enc"):
         a = sorted(
             tuple(r_)
-            for r_ in table_store.read_state(spark, f"{s}/{t}").collect()
+            for r_ in table_store.read_state(spark, s[t]).collect()
         )
         b = sorted(
             tuple(r_)
-            for r_ in table_store.read_state(spark, f"{r}/{t}").collect()
+            for r_ in table_store.read_state(spark, r[t]).collect()
         )
         assert a == b, f"table {t} diverged between stream and replay"
 
     # all three refreshes actually FIRED in the stream
     vers = sorted(
         r_.vocab_ver
-        for r_ in table_store.read_state(spark, f"{s}/vocab")
+        for r_ in table_store.read_state(spark, s["vocab"])
         .select("vocab_ver").distinct().collect()
     )
     assert vers == [0, 2], "vocab-ratio trigger did not fire at batch 2"
-    w_emb, _, _ = pipelines.read_quality_state(spark, f"{s}/quality")
+    w_emb, _, _ = pipelines.read_quality_state(spark, s["quality"])
     assert {r_.w_milli for r_ in w_emb.collect()} == {300}, (
         "quality-PSI trigger did not swap the model"
     )
-    assert pipelines.quality_drift_psi6(spark, f"{s}/quality") == 0
-    stored_cb, _ = pipelines.read_ivf_index(spark, f"{s}/ivf")
+    assert pipelines.quality_drift_psi6(spark, s["quality"]) == 0
+    stored_cb, _ = pipelines.read_ivf_index(spark, s["ivf"])
     assert stored_cb is not None and stored_cb.count() == 8, (
         "IVF-imbalance trigger did not install the refreshed codebook"
     )
@@ -2094,108 +2286,28 @@ def test_crash_between_tables_reader_never_sees_mixed_frontier(
 
 
 def test_v3_replay_bucketed_matches_flat_through_refreshes(
-    spark, tmp_path
+    spark, tmp_path, v3_flat_replay
 ):
     """Round 12 interplay pin closing the buckets × refresh × composed
     cross product: the 7-table loop replayed with ``buckets=4`` through
-    a history where ALL THREE policies fire must end row-identical to
-    the flat layout — each refresh commits a FLAT full snapshot onto
-    bucketed tables (the documented compact-class migration), the next
-    bucketed merge re-buckets, and no artifact (embedded model,
-    codebook rows, vocab versions, encodings) is disturbed."""
-    from pyspark.sql import functions as F
-
-    from realtime_datawarehouse_spark.functions.vector import l2_norm
-    from realtime_datawarehouse_spark.operators import table_store, textops
+    a history where ALL THREE policies fire (_v3_history) must end
+    row-identical to the flat layout — each refresh commits a FLAT full
+    snapshot onto bucketed tables (the documented compact-class
+    migration), the next bucketed merge re-buckets, and no artifact
+    (embedded model, codebook rows, vocab versions, encodings) is
+    disturbed."""
+    from realtime_datawarehouse_spark.operators import table_store
     from realtime_datawarehouse_spark.streaming import pipelines
 
-    def cb(rows):
-        return spark.createDataFrame(
-            rows, "centroid_id long, cv array<double>"
-        ).select("centroid_id", "cv", l2_norm(F.col("cv")).alias("cn"))
+    h, fp = v3_flat_replay
+    bp = _v3_replay(spark, h, str(tmp_path / "bk"), buckets=4)
 
-    def basis(i, dim=8, eps=0.0):
-        v = [eps] * dim
-        v[i] = 1.0
-        return v
+    def rows(pth):
+        df = table_store.read_state(spark, pth).drop("ver")
+        return sorted(tuple(r) for r in df.collect())
 
-    def hot(j):
-        return [1.0] + [
-            0.001 * (j % 6 + 1) if d == 1 + j % 7 else 0.0
-            for d in range(1, 8)
-        ]
-
-    ab, xy = "abab abab abab", " ".join(["xyxy"] * 24)
-    ab_long = " ".join(["abab"] * 24)
-    rows = [(1 + i, ab, basis(i, eps=0.01)) for i in range(8)]
-    rows += [(100 + j, ab_long, hot(j)) for j in range(8)]
-    rows += [(108 + j, xy, hot(8 + j)) for j in range(8)]
-    rows += [(116 + j, xy, hot(16 + j)) for j in range(8)]
-    all_df = spark.createDataFrame(
-        rows, "doc_id long, text string, embedding array<double>"
-    )
-    batches = [
-        all_df.where(F.col("doc_id") <= 8),
-        all_df.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 108)),
-        all_df.where((F.col("doc_id") >= 108) & (F.col("doc_id") < 116)),
-        all_df.where(F.col("doc_id") >= 116),
-    ]
-    stale_cb = cb([(i, basis(i)) for i in range(8)])
-    split_cb = cb([(i, hot(8 + i)) for i in range(7)] + [(7, basis(4))])
-    stale_w, fresh_w = _const_weights(spark, 500), _const_weights(spark, 300)
-    docs0 = batches[0].select("doc_id", "text")
-    bpe_corpus = (
-        batches[0].unionByName(batches[1]).unionByName(batches[2])
-        .select("doc_id", "text")
-    )
-    q_corpus = all_df.select("doc_id", "text")
-    m0 = [
-        (r.left, r.right)
-        for r in textops.bpe_train(docs0, 4).orderBy("step").collect()
-    ]
-    r0 = pipelines._bpe_ratio_milli(
-        textops.bpe_encode_vocab(docs0, merges=m0)
-    )
-
-    def run(root, buckets):
-        p = {
-            n: f"{root}/{n}"
-            for n in ("sigs", "flags", "comps", "ivf", "quality",
-                      "vocab", "enc")
-        }
-        pipelines.install_bpe_vocab(spark, p["vocab"], m0, 0, r0)
-        pipelines.ingest_quality_step(
-            spark, docs0, p["quality"], 0, weights=stale_w,
-            buckets=buckets,
-        )
-        pipelines.refresh_quality_model(
-            spark, p["quality"], docs0, refresh_id=0, new_weights=stale_w
-        )
-        for i, b in enumerate(batches):
-            pipelines.production_ingest_step(
-                spark, b, stale_cb,
-                p["sigs"], p["flags"], p["comps"], p["ivf"],
-                batch_id=i, quality_path=p["quality"],
-                quality_weights=stale_w,
-                quality_refresh_every=3,
-                quality_corpus_provider=lambda s: q_corpus,
-                quality_refresh_weights_provider=lambda s: fresh_w,
-                ivf_refresh_every=3,
-                ivf_refresh_centroids_provider=lambda s: split_cb,
-                bpe_vocab_path=p["vocab"], bpe_enc_path=p["enc"],
-                bpe_corpus_provider=lambda s: bpe_corpus,
-                buckets=buckets,
-            )
-        out = {}
-        for t, pth in p.items():
-            df = table_store.read_state(spark, pth).drop("ver")
-            out[t] = sorted(tuple(r) for r in df.collect())
-        return out, p
-
-    flat, _ = run(str(tmp_path / "flat"), None)
-    bucketed, bp = run(str(tmp_path / "bk"), 4)
-    for t in flat:
-        assert flat[t] == bucketed[t], f"table {t} diverged"
+    for t in fp:
+        assert rows(fp[t]) == rows(bp[t]), f"table {t} diverged"
     # the refreshes really fired in the bucketed run, and the next
     # bucketed merge re-bucketed the refresh's flat snapshot
     vers = sorted(
@@ -2844,8 +2956,6 @@ def test_bpe_corpus_pipeline_stream_matches_step_replay(spark, tmp_path):
     """The foreachBatch builder wires the step 1:1: a two-micro-batch
     stream (day-0 vocab installed up front) ends with the same enc table
     a direct step replay produces, refresh included."""
-    import time
-
     from pyspark.sql import functions as F  # noqa: F401
 
     from realtime_datawarehouse_spark.operators import table_store, textops
@@ -2867,8 +2977,7 @@ def test_bpe_corpus_pipeline_stream_matches_step_replay(spark, tmp_path):
 
     in_dir = str(tmp_path / "in")
     for b in (b0, b1):
-        b.coalesce(1).write.mode("append").parquet(in_dir)
-        time.sleep(1.1)  # file source orders micro-batches by mod time
+        _append_in_order(b, in_dir)
 
     def run(root, via_stream):
         vpath, epath = f"{root}/vocab", f"{root}/enc"
@@ -2923,33 +3032,14 @@ def test_bpe_corpus_pipeline_stream_matches_step_replay(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("backend_kind", ["local", "object-faulted"])
-def test_two_concurrent_composed_loop_writers(spark, tmp_path, backend_kind):
-    """TWO production_ingest_step writers (threads, barrier-synced per
-    batch so every round genuinely overlaps) ingest disjoint doc
-    families into ONE set of standing tables. Every cross-writer
-    conflict must be absorbed by the documented ConcurrentCommitError
-    retry (tallied — the race must actually happen), and the merged end
-    state must equal a SERIALIZED reference execution of the same
-    batches (disjoint families ⇒ no cross-writer candidate pairs ⇒ the
-    serialized state is the unique correct answer). The object-faulted
-    variant additionally runs the whole race through the paging +
-    503-throwing store behind the retry client."""
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from realtime_datawarehouse_spark.operators import (
-        object_store,
-        similarity,
-        table_store,
-    )
-    from realtime_datawarehouse_spark.streaming import pipelines
+def _composed_loop_batches(spark):
+    """Each writer's three 2-doc batches, (a_batches, b_batches), and the
+    IVF centroids. Each family plants in-family dups (identical text), so
+    flags and components are non-trivial; the families share no token,
+    so there are no cross-writer candidate pairs."""
+    from realtime_datawarehouse_spark.operators import similarity
 
     def fam(prefix, base_id):
-        # planted in-family dups (identical text) → non-trivial flags
-        # and components; families share no token, so no cross pairs
         text = " ".join(f"{prefix}{i:02d}" for i in range(30))
         other = " ".join(f"{prefix}x{i:02d}" for i in range(30))
         rows = [
@@ -2968,47 +3058,83 @@ def test_two_concurrent_composed_loop_writers(spark, tmp_path, backend_kind):
             for i in range(3)
         ]
 
-    a_batches = fam("aw", 0)
-    b_batches = fam("bw", 100)
     centroids = similarity._ivf_centroids(
         spark.createDataFrame(
             [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 1.0, 0.0])],
             "vec_id long, embedding array<double>",
         )
     )
+    return fam("aw", 0), fam("bw", 100), centroids
 
-    def run_writers(root, racing):
-        paths = tuple(
-            f"{root}/{t}" for t in ("sigs", "flags", "comps", "ivf")
-        )
-        q = f"{root}/quality"
 
-        def steps(batches):
-            for i, b in enumerate(batches):
-                if racing:
-                    barrier.wait(timeout=120)
-                pipelines.production_ingest_step(
-                    spark, b, centroids, *paths, i, quality_path=q
-                )
+def _run_composed_loop_writers(spark, root, batches, racing):
+    """Both writers' production_ingest_step runs into ONE set of standing
+    tables under ``root``: racing = two threads, barrier-synced per
+    batch so every round genuinely overlaps; otherwise writer A's
+    batches, then writer B's. Returns {table: sorted rows}."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
 
-        if racing:
-            barrier = threading.Barrier(2)
-            with ThreadPoolExecutor(2) as ex:
-                futs = [ex.submit(steps, bs) for bs in (a_batches, b_batches)]
-                for f in futs:
-                    f.result()  # re-raise any writer failure
-        else:
-            steps(a_batches)
-            steps(b_batches)
-        out = {}
-        for p in paths + (q,):
-            df = table_store.read_state(spark, p)
-            drop = [c for c in ("ver", "batch_id") if c in df.columns]
-            out[p.rsplit("/", 1)[-1]] = sorted(
-                tuple(r) for r in df.drop(*drop).collect()
+    from realtime_datawarehouse_spark.operators import table_store
+    from realtime_datawarehouse_spark.streaming import pipelines
+
+    a_batches, b_batches, centroids = batches
+    paths = tuple(f"{root}/{t}" for t in ("sigs", "flags", "comps", "ivf"))
+    q = f"{root}/quality"
+    barrier = threading.Barrier(2)
+
+    def steps(bs):
+        for i, b in enumerate(bs):
+            if racing:
+                barrier.wait(timeout=120)
+            pipelines.production_ingest_step(
+                spark, b, centroids, *paths, i, quality_path=q
             )
-        return out
 
+    if racing:
+        with ThreadPoolExecutor(2) as ex:
+            futs = [ex.submit(steps, bs) for bs in (a_batches, b_batches)]
+            for f in futs:
+                f.result()  # re-raise any writer failure
+    else:
+        steps(a_batches)
+        steps(b_batches)
+    out = {}
+    for p in paths + (q,):
+        df = table_store.read_state(spark, p)
+        drop = [c for c in ("ver", "batch_id") if c in df.columns]
+        out[p.rsplit("/", 1)[-1]] = sorted(
+            tuple(r) for r in df.drop(*drop).collect()
+        )
+    return out
+
+
+@pytest.fixture(scope="module")
+def composed_loop_serialized(spark, tmp_path_factory):
+    """The composed-loop batches and their SERIALIZED reference end state,
+    shared by both backends' race: (batches, {table: sorted rows})."""
+    batches = _composed_loop_batches(spark)
+    root = str(tmp_path_factory.mktemp("composed_serial"))
+    return batches, _run_composed_loop_writers(spark, root, batches, False)
+
+
+@pytest.mark.parametrize("backend_kind", ["local", "object-faulted"])
+def test_two_concurrent_composed_loop_writers(
+    spark, tmp_path, backend_kind, composed_loop_serialized
+):
+    """TWO production_ingest_step writers (threads, barrier-synced per
+    batch so every round genuinely overlaps) ingest disjoint doc
+    families into ONE set of standing tables. Every cross-writer
+    conflict must be absorbed by the documented ConcurrentCommitError
+    retry (tallied — the race must actually happen), and the merged end
+    state must equal a SERIALIZED reference execution of the same
+    batches (disjoint families ⇒ no cross-writer candidate pairs ⇒ the
+    serialized state is the unique correct answer). The object-faulted
+    variant additionally runs the whole race through the paging +
+    503-throwing store behind the retry client."""
+    from realtime_datawarehouse_spark.operators import object_store, table_store
+
+    batches, serialized = composed_loop_serialized
     prev_arb = table_store._ARBITER
     conflicts = {"n": 0}
     real_commit = table_store.commit
@@ -3033,11 +3159,12 @@ def test_two_concurrent_composed_loop_writers(spark, tmp_path, backend_kind):
                 )
             )
         table_store.commit = counting_commit
-        raced = run_writers(str(tmp_path / "raced"), racing=True)
+        raced = _run_composed_loop_writers(
+            spark, str(tmp_path / "raced"), batches, racing=True
+        )
     finally:
         table_store.commit = real_commit
         table_store.set_arbiter(prev_arb)
-    serialized = run_writers(str(tmp_path / "serial"), racing=False)
 
     assert set(raced) == set(serialized)
     for t in raced:
@@ -3054,7 +3181,7 @@ def test_two_writers_race_across_quality_and_vocab_refreshes(
     """Round 12 (VERDICT r11 item 3): the r11 race covered the
     five-table loop; this races TWO production_ingest_step writers
     whose run CROSSES BOTH r11 refresh kinds — writer B's final batch
-    fires the BPE vocab-ratio trigger (retrain + CAS install of v2)
+    fires the BPE vocab-ratio trigger (retrain + CAS install of v1)
     while writer A's final batch crosses the quality-PSI cadence
     (retrain + full-state model swap) — all against ONE set of seven
     standing tables, barrier-synced per round so the refreshes
@@ -3100,8 +3227,8 @@ def test_two_writers_race_across_quality_and_vocab_refreshes(
             for i, t in enumerate(texts)
         ]
 
-    a_batches = fam(0, [long_a, long_a, long_a])
-    b_batches = fam(100, [long_b, long_b, drift])
+    a_batches = fam(0, [long_a, long_a])
+    b_batches = fam(100, [long_b, drift])
     day0 = spark.createDataFrame(
         [(900, "tiny one"), (901, "tiny two")], "doc_id long, text string"
     )
@@ -3158,7 +3285,7 @@ def test_two_writers_race_across_quality_and_vocab_refreshes(
                     spark, b, centroids,
                     p["sigs"], p["flags"], p["comps"], p["ivf"],
                     batch_id=i, quality_path=p["quality"],
-                    quality_refresh_every=2,
+                    quality_refresh_every=1,
                     quality_corpus_provider=lambda s: lake,
                     quality_refresh_weights_provider=lambda s: fresh_w,
                     bpe_vocab_path=p["vocab"], bpe_enc_path=p["enc"],
@@ -3211,7 +3338,7 @@ def test_two_writers_race_across_quality_and_vocab_refreshes(
         for r in table_store.read_state(spark, raced["vocab"])
         .select("vocab_ver").distinct().collect()
     )
-    assert vers == [0, 2], "vocab install did not land mid-race"
+    assert vers == [0, 1], "vocab install did not land mid-race"
     w_emb, _, _ = pipelines.read_quality_state(spark, raced["quality"])
     assert {r.w_milli for r in w_emb.collect()} == {300}, (
         "quality refresh did not land mid-race"
