@@ -41,13 +41,8 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def rebalance_narrow_scan(
     df: DataFrame,
-    min_parts: int | None = None,
     min_bytes: int = 0,
 ) -> DataFrame:
     """Round-robin-redistribute a scan that has fewer partitions than the
@@ -61,8 +56,8 @@ def rebalance_narrow_scan(
     count no matter how many cores the cluster has. The one-time shuffle
     moves only the raw scan rows — orders of magnitude less data than what
     the downstream explode/codec produces from them. When the scan already
-    has ≥ min_parts partitions (the healthy 100 TB layout), this is a
-    no-op: no shuffle is added.
+    has at least the session's default parallelism in partitions (the
+    healthy 100 TB layout), this is a no-op: no shuffle is added.
 
     ``min_bytes`` (r14): for operators whose per-row map work is LIGHT
     (a plain tokenize+count, one small explode), the redistribution
@@ -91,7 +86,7 @@ def rebalance_narrow_scan(
                 return df
         except Exception:
             pass  # no estimate → fall through to the partition-count rule
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -471,7 +471,8 @@ class ObjectStoreCASArbiter:
         return f"{self._prefix}/{quote(path, safe='')}/_commits/"
 
     def committed(self, path: str) -> dict[int, str]:
-        """All committed sequences → version names (empty pre-arbiter)."""
+        """All committed sequences → version names (empty before the
+        first commit)."""
         out: dict[int, str] = {}
         d = self._dir(path)
         for key in self._store.list(d):
@@ -485,7 +486,8 @@ class ObjectStoreCASArbiter:
         return out
 
     def head(self, path: str) -> tuple[int, str | None]:
-        """(max committed sequence, its version) — (0, None) pre-arbiter.
+        """(max committed sequence, its version) — (0, None) before the
+        first commit.
         One list + ONE get, re-listing if the max was concurrently
         pruned — the same hot-path shape as the local head()."""
         d = self._dir(path)

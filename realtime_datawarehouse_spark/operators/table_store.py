@@ -8,7 +8,7 @@ NOTHING materialized on the driver:
 
     <path>/_commits/NNN      arbiter log: sequence NNN → committed version
     <path>/v-0000000001/     immutable parquet snapshot written by executors
-    <path>/_CURRENT          derived cache of the head (pre-arbiter compat)
+    <path>/_BUCKETING        bucketed tables only: {"pk", "n"}, set once
 
 A writer computes the merged result as a DataFrame (reading the current
 version — a different directory than the one it writes), writes the next
@@ -31,12 +31,14 @@ max committed sequence. Consequences:
   metadata-only parquet file for an empty DataFrame), so a batch whose
   deletes remove every PK truncates the table instead of leaving stale
   state on disk (ADVICE r01 #5).
-- Old versions are garbage-collected after the pointer flip. Retention is
+- The arbiter log is the ONLY commit record (the ``_delta_log`` analog):
+  head, time travel and GC all read it, and a commit writes nothing else.
+- Old versions are garbage-collected after each commit. Retention is
   the ``retain`` knob on :func:`commit` / :func:`merge_upsert` (default 2
-  = current + predecessor): GC keeps the newest ``retain`` FLIPPED
-  snapshots, identified via the tiny ``_FLIPS`` append-only log (the
-  ``_delta_log`` analog), and never touches an unflipped claim directory
-  (an in-flight writer) younger than the orphan grace period.
+  = current + predecessor): GC keeps the newest ``retain`` COMMITTED
+  snapshots, ranked by their sequence in the arbiter log, and never
+  touches a claim directory no sequence names (an in-flight writer)
+  younger than the orphan grace period.
 - ``merge_upsert(..., buckets=N)`` stores snapshots hive-partitioned by
   ``pmod(hash(pk), N)``: a merge reads only the buckets its batch
   touches and carries the rest forward by hardlink — per-merge cost
@@ -55,14 +57,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-_POINTER = "_CURRENT"  # derived cache of the arbiter head (legacy pointer)
-_FLIPS = "_FLIPS"  # append-only log of flipped version names (_delta_log analog)
 _COMMITS = "_commits"  # arbiter sequence files: NNN → committed version name
 _BUCKETING = "_BUCKETING"  # json {"pk": col, "n": buckets} — set once per table
 _PROPS = "_PROPS.json"  # per-version commit properties (Delta commitInfo analog)
 _BUCKET_COL = "__bucket"  # hive partition column inside bucketed snapshots
 _MAX_BUCKETS = 4096  # bounds the per-merge touched-bucket collect
-# an unflipped claim dir older than this is a crashed writer's orphan.
+# an uncommitted claim dir older than this is a crashed writer's orphan.
 # Default for the ``orphan_grace_s`` knob on commit/merge_upsert: it must
 # exceed the longest legitimate SINGLE-snapshot write, or a slow writer's
 # claim dir can be pruned mid-write by a concurrent committer (it heals
@@ -73,11 +73,10 @@ _ORPHAN_GRACE_S = 600.0
 # milliseconds) is collected by prune. A writer stalled past it mid-PUT
 # self-heals: put_if_absent re-stages a fresh temp and retries the link.
 _CLAIM_GRACE_S = 60.0
-# compact the flip log past this size, keeping the newest tail (entries
-# older than the retention window only matter for GC of dirs that were
-# removed long ago — a pre-tail dir degrades safely to the orphan path)
-_FLIPS_COMPACT_BYTES = 64 * 1024
-_FLIPS_KEEP_LINES = 1024
+# sequence files the arbiter's prune keeps (never fewer than retain + 1):
+# entries older than the retention window only matter for GC of dirs that
+# were removed long ago — a pre-tail dir degrades safely to the orphan path
+_COMMITS_KEEP_TAIL = 1024
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -114,7 +113,8 @@ class LocalCASArbiter:
         return os.path.join(path, _COMMITS)
 
     def committed(self, path: str) -> dict[int, str]:
-        """All committed sequences → version names (empty pre-arbiter)."""
+        """All committed sequences → version names (empty before the
+        first commit)."""
         out: dict[int, str] = {}
         try:
             entries = os.listdir(self._dir(path))
@@ -134,16 +134,16 @@ class LocalCASArbiter:
         return out
 
     def head(self, path: str) -> tuple[int, str | None]:
-        """(max committed sequence, its version) — (0, None) pre-arbiter.
+        """(max committed sequence, its version) — (0, None) before the
+        first commit.
 
         Hot-path form: one listdir + ONE file read (the max sequence),
         not :meth:`committed`'s full scan — ``current_version`` sits on
-        every ``read_state``/micro-batch, so this must cost what the old
-        single-pointer read cost. The read targets the LISTED entry name
-        (never a re-formatted one, so a non-zero-padded sequence file
-        from a foreign tool can't loop it); a concurrently-pruned max
-        re-lists, and any other per-file OSError falls back to the full
-        scan — the same degradation the old scan-based head gave."""
+        every ``read_state``/micro-batch. The read targets the LISTED
+        entry name (never a re-formatted one, so a non-zero-padded
+        sequence file from a foreign tool can't loop it); a
+        concurrently-pruned max re-lists, and any other per-file OSError
+        falls back to the full scan."""
         while True:
             try:
                 entries = os.listdir(self._dir(path))
@@ -210,9 +210,11 @@ class LocalCASArbiter:
                     pass
 
     def prune(self, path: str, keep_newest: int) -> None:
-        """Drop sequence files beyond the newest ``keep_newest`` (the
-        _FLIPS compaction analog — a pre-tail version degrades to the
-        orphan-GC path) and stale temp claims from crashed PUTs."""
+        """Drop sequence files beyond the newest ``keep_newest``, and stale
+        temp claims from crashed PUTs. :func:`commit` sizes the kept tail
+        to cover its retention window, so a retained snapshot never leaves
+        the log; a version older than the tail degrades to the orphan-GC
+        path."""
         import time
 
         d = self._dir(path)
@@ -260,36 +262,10 @@ def set_arbiter(arbiter) -> None:
     _ARBITER = arbiter
 
 
-def _pointer_path(path: str) -> str:
-    return os.path.join(path, _POINTER)
-
-
-def _legacy_pointer(path: str) -> str | None:
-    try:
-        with open(_pointer_path(path), encoding="utf-8") as f:
-            name = f.read().strip()
-    except FileNotFoundError:
-        return None
-    return name or None
-
-
-def _head(path: str) -> tuple[int, str | None]:
-    """Arbiter head with the upgrade-boundary fallback: a table written
-    before the arbiter existed has no ``_commits/`` — its head is the
-    legacy pointer at sequence 0, so the first arbiter commit contends on
-    sequence 1."""
-    seq, version = _ARBITER.head(path)
-    if version is None:
-        return 0, _legacy_pointer(path)
-    return seq, version
-
-
 def current_version(path: str) -> str | None:
     """Name of the live version directory, or None if never committed —
-    DERIVED from the arbiter's committed-sequence listing (the legacy
-    ``_CURRENT`` file is a maintained cache, read only for pre-arbiter
-    tables)."""
-    return _head(path)[1]
+    DERIVED from the arbiter's committed-sequence listing."""
+    return _ARBITER.head(path)[1]
 
 
 def read_state(
@@ -307,9 +283,10 @@ def read_state(
     if version is None:
         return None
     vdir = os.path.join(path, version)
-    flipped = _flipped_versions(path)
-    committed = flipped is None or version in flipped
-    if not os.path.isdir(vdir) or (explicit and not committed):
+    # the head is committed by derivation; only time travel scans the log
+    if not os.path.isdir(vdir) or (
+        explicit and version not in _committed_versions(path)
+    ):
         raise FileNotFoundError(
             f"version {version!r} not retained as a committed snapshot at "
             f"{path} (available: {list_versions(path)})"
@@ -334,27 +311,16 @@ def _version_dirs(path: str) -> list[str]:
     ]
 
 
-def _flipped_versions(path: str) -> set[str] | None:
-    """Version names that were ever committed: the union of the arbiter's
-    committed-sequence contents and the legacy ``_FLIPS`` log (kept as a
-    compat mirror). None for a pre-log, pre-arbiter store (treat all dirs
-    as committed)."""
-    arb = set(_ARBITER.committed(path).values())
-    try:
-        with open(os.path.join(path, _FLIPS), encoding="utf-8") as f:
-            return arb | {ln.strip() for ln in f if ln.strip()}
-    except FileNotFoundError:
-        return arb or None
+def _committed_versions(path: str) -> set[str]:
+    """Version names the arbiter log records as committed."""
+    return set(_ARBITER.committed(path).values())
 
 
 def list_versions(path: str) -> list[str]:
     """Retained COMMITTED snapshot names, oldest first (an in-flight
     writer's claim directory is not a snapshot and is excluded)."""
-    dirs = _version_dirs(path)
-    flipped = _flipped_versions(path)
-    if flipped is not None:
-        dirs = [d for d in dirs if d in flipped]
-    return sorted(dirs)
+    committed = _committed_versions(path)
+    return sorted(d for d in _version_dirs(path) if d in committed)
 
 
 def _bucket_spec(path: str, pk: str, buckets: int | None) -> dict | None:
@@ -519,7 +485,8 @@ def commit(
 ) -> str:
     """Write ``df`` as the next version (executor-parallel) and commit it
     via ONE conditional PUT of the next arbiter sequence. Returns the
-    committed version name.
+    committed version name. That sequence file is the commit's only
+    record: after the winning PUT, commit() just runs GC.
 
     ``_writer`` (internal): callable(df, version_dir) overriding the
     default flat parquet append — the bucketed merge path uses it to
@@ -542,13 +509,13 @@ def commit(
     no interleave between check and commit exists to guard.
 
     ``retain`` is the retention window (Delta's log-retention knob): GC
-    keeps the newest ``retain`` flipped snapshots, so a concurrent
+    keeps the newest ``retain`` committed snapshots, so a concurrent
     writer's pinned base survives ``retain - 1`` commit cycles. The
     default 2 (current + predecessor) suits single-writer streams; size
     it to the expected writer concurrency for multi-writer tables
     (``merge_upsert`` forwards it).
 
-    ``orphan_grace_s`` bounds how long an UNFLIPPED claim directory (an
+    ``orphan_grace_s`` bounds how long an UNCOMMITTED claim directory (an
     in-flight writer's snapshot-in-progress) is spared from GC. It must
     exceed the longest legitimate single-snapshot write: a writer slower
     than the grace can have its claim pruned mid-write by a concurrent
@@ -601,7 +568,7 @@ def commit(
     # duration either has not PUT yet (not committed) or has (committed) —
     # the stale-lock breaker and its residual stolen-lock window are gone.
     while True:
-        head_seq, head_ver = _head(path)
+        head_seq, head_ver = _ARBITER.head(path)
         if check and head_ver != expected_version:
             shutil.rmtree(os.path.join(path, version), ignore_errors=True)
             raise ConcurrentCommitError(
@@ -635,7 +602,7 @@ def commit(
                 ):
                     s = head_seq + 2
                     while not _ARBITER.put_if_absent(path, s, head_ver):
-                        cur_s, cur_v = _head(path)
+                        cur_s, cur_v = _ARBITER.head(path)
                         if cur_v != version:
                             healed = True  # another commit moved the head
                             break
@@ -667,115 +634,26 @@ def commit(
                 f"{current_version(path)!r} during commit"
             )
 
-    # ---- derived / compat state. Everything below is advisory: the
-    # committed-sequence listing above is the single source of truth for
-    # readers (current_version derives from it) and for GC; the _FLIPS
-    # mirror and _CURRENT cache keep pre-arbiter tooling and forensic
-    # inspection working. All updates here are order-free (set semantics
-    # or derive-then-write), so they need no mutual exclusion.
-    flips_path = os.path.join(path, _FLIPS)
-    if not os.path.exists(flips_path):
-        # upgrade boundary (ADVICE r5 #5): first new-code commit on a
-        # pre-flip-log table. Pre-log semantics treated every on-disk
-        # snapshot as committed, so seed the new log with them (the
-        # pre-arbiter pointer value and its retained predecessors
-        # included) — otherwise explicit-version read_state on a
-        # still-on-disk pre-log snapshot would raise FileNotFoundError
-        # and GC would demote it to the orphan path across the upgrade.
-        # Our own claim dir is excluded (it is in the arbiter log
-        # already). Bound the seed by the CURRENT head and skip dirs
-        # younger than the orphan grace: a dir numbered at or below the
-        # head can still be a concurrent writer's in-flight claim, and
-        # seeding one as "flipped" would let GC delete it mid-write
-        # without the grace protection. Racing seeders at worst write
-        # duplicate lines — the log is read as a set.
-        now_ptr = current_version(path)
-        seed = []
-        if now_ptr is not None:
-            for d in sorted(_version_dirs(path)):
-                if d > now_ptr or d == version:
-                    continue
-                try:
-                    age = _time.time() - os.path.getmtime(
-                        os.path.join(path, d)
-                    )
-                except OSError:
-                    continue
-                if d == now_ptr or age > orphan_grace_s:
-                    seed.append(d)
-        if seed:
-            with open(flips_path, "a", encoding="utf-8") as f:
-                f.writelines(d + "\n" for d in seed)
-                f.flush()
-                os.fsync(f.fileno())
-    try:
-        if os.path.getsize(flips_path) > _FLIPS_COMPACT_BYTES:
-            # the tail must cover the retention window: truncating an
-            # entry that still names a retained dir demotes it to the
-            # orphan path (the documented pre-tail degrade). An append
-            # racing the rewrite can lose its line — harmless since the
-            # arbiter listing, not _FLIPS, protects arbiter-era commits.
-            keep_lines = max(_FLIPS_KEEP_LINES, retain + 1)
-            with open(flips_path, encoding="utf-8") as f:
-                tail = f.readlines()[-keep_lines:]
-            ftmp = (
-                flips_path
-                + f".tmp.{os.getpid()}.{_time.monotonic_ns()}"
-            )
-            with open(ftmp, "w", encoding="utf-8") as f:
-                f.writelines(tail)
-            os.replace(ftmp, flips_path)
-    except FileNotFoundError:
-        pass
-    with open(flips_path, "a", encoding="utf-8") as f:
-        f.write(version + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    # _CURRENT cache: DERIVE-then-write, and SKIP the replace when the
-    # cache already names a newer version than we derived (advisor r7:
-    # derive-then-write alone is not regression-proof — a writer can
-    # derive, stall, and replace after a newer writer's replace). The
-    # skip narrows but does not close the window (two writers can both
-    # pass the check; the staler replace lands last) — acceptable because
-    # the cache is ADVISORY: arbiter-era readers derive the head from the
-    # committed listing and never read this file; only pre-arbiter
-    # tooling does, and it tolerates a briefly-stale pointer. tmp name
-    # unique per writer including same-process threads.
-    _, derived = _head(path)
-    target = derived or version
-    cached = _legacy_pointer(path)
-    if not (cached is not None and cached > target):
-        tmp = (
-            _pointer_path(path) + f".tmp.{os.getpid()}.{_time.monotonic_ns()}"
-        )
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(target)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, _pointer_path(path))  # atomic: old or new
-
     # GC: keep the ``retain`` most recently COMMITTED snapshots (plus the
     # direct predecessor — a grace period for readers holding the old
     # head). Recency is commit-sequence order from the arbiter listing
     # (version NAMES need not be commit-ordered: a loser of one CAS race
-    # can win the next with a lower-numbered claim dir); pre-arbiter
-    # snapshots known only to _FLIPS rank after all arbiter commits, by
-    # name. Only versions in a log are ever deleted: an unlogged claim
-    # directory is an in-flight writer, left alone unless older than the
-    # orphan grace period (a crashed writer).
+    # can win the next with a lower-numbered claim dir). Only committed
+    # versions are ever deleted: a claim directory no sequence names is an
+    # in-flight writer, left alone unless older than the orphan grace
+    # period (a crashed writer).
     existing = set(_version_dirs(path))
-    flipped_set = (_flipped_versions(path) or {version}) & existing
     seq_map = _ARBITER.committed(path)
-    by_recency = [seq_map[s] for s in sorted(seq_map, reverse=True)]
-    legacy_only = sorted(flipped_set - set(by_recency), reverse=True)
-    ordered = [d for d in by_recency + legacy_only if d in existing]
-    newest_flipped = ordered[: max(retain, 1)]
-    keep = set(newest_flipped) | {version, previous or version}
-    _ARBITER.prune(path, max(_FLIPS_KEEP_LINES, retain + 1))
+    committed = set(seq_map.values())
+    ordered = [
+        v for _, v in sorted(seq_map.items(), reverse=True) if v in existing
+    ]
+    keep = set(ordered[: max(retain, 1)]) | {version, previous or version}
+    _ARBITER.prune(path, max(_COMMITS_KEEP_TAIL, retain + 1))
     for d in existing - keep:
-        if d in flipped_set:
+        if d in committed:
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-        else:  # unflipped claim: only a crashed writer's orphan is pruned
+        else:  # uncommitted claim: only a crashed writer's orphan is pruned
             try:
                 age = _time.time() - os.path.getmtime(os.path.join(path, d))
             except OSError:

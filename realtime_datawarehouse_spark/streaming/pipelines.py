@@ -2165,16 +2165,29 @@ def _merge_sink(
     """The last hop of a §3.4 column (checkpoint ``{work_dir}/ck3``): each
     micro-batch MERGEs into the versioned table store at ``store_path``
     (``table_store.merge_upsert``) keyed by column ``pk``; the batch id is
-    the row version, so per key the row of the latest batch wins."""
+    the row version, so per key the row of the latest batch wins.
+
+    An empty batch (an append-mode window that has not closed yet) commits
+    nothing: a MERGE of no rows would only write an unchanged version and
+    push a real one out of the store's retention window. Until the first
+    non-empty batch the store does not exist and ``read_state`` returns
+    None. The batch is persisted for the emptiness check, so its stateful
+    plan runs once."""
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table_store.merge_upsert(
-            batch_df.sparkSession,
-            batch_df.withColumn("ver", F.lit(batch_id)),
-            store_path,
-            pk=pk,
-            version_col="ver",
-        )
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            table_store.merge_upsert(
+                batch_df.sparkSession,
+                batch_df.withColumn("ver", F.lit(batch_id)),
+                store_path,
+                pk=pk,
+                version_col="ver",
+            )
+        finally:
+            batch_df.unpersist()
 
     return (
         df.writeStream.outputMode(mode)

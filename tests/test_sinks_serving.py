@@ -811,27 +811,6 @@ def test_commit_retain_window_keeps_slow_writers_base_readable(
         ts.read_state(spark, narrow, v1)
 
 
-def test_flip_log_compacts_and_gc_still_correct(spark, tmp_path, monkeypatch):
-    """The _FLIPS log must stay bounded on long-running streams (compacted
-    to its newest tail once oversized) without weakening GC: retained
-    snapshots stay readable, older flipped dirs still get collected."""
-    import os
-
-    from realtime_datawarehouse_spark.operators import table_store as ts
-
-    monkeypatch.setattr(ts, "_FLIPS_COMPACT_BYTES", 64)
-    monkeypatch.setattr(ts, "_FLIPS_KEEP_LINES", 3)
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([(1, 1)], "pk int, ver int")
-    for _ in range(10):
-        v = ts.commit(df, path, retain=2)
-    log = open(os.path.join(path, ts._FLIPS), encoding="utf-8").read()
-    assert len(log.splitlines()) <= 4  # tail + the newest append
-    assert ts.current_version(path) == v
-    assert ts.read_state(spark, path).count() == 1
-    assert len(ts.list_versions(path)) <= 3  # retain + grace predecessor
-
-
 @pytest.mark.parametrize("buckets", [None, 8], ids=["flat", "bucketed"])
 def test_concurrent_readers_see_whole_snapshots(spark, tmp_path, buckets):
     """The reader guarantee the atomic pointer flip exists for: while a
@@ -899,22 +878,66 @@ def test_concurrent_readers_see_whole_snapshots(spark, tmp_path, buckets):
 
 
 def test_flip_log_tail_covers_retention(spark, tmp_path, monkeypatch):
-    """Round-5 review: compaction keeps ``max(_FLIPS_KEEP_LINES,
-    retain + 1)`` lines — a retention window wider than the static tail
-    must never demote a still-retained snapshot to the orphan path or
-    break explicit-version time travel on it."""
+    """The arbiter log's prune keeps ``max(_COMMITS_KEEP_TAIL, retain +
+    1)`` sequences — a retention window wider than the static tail must
+    never demote a still-retained snapshot to the orphan path or break
+    explicit-version time travel on it."""
     from realtime_datawarehouse_spark.operators import table_store as ts
 
-    monkeypatch.setattr(ts, "_FLIPS_COMPACT_BYTES", 16)
-    monkeypatch.setattr(ts, "_FLIPS_KEEP_LINES", 2)
+    monkeypatch.setattr(ts, "_COMMITS_KEEP_TAIL", 2)
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(1, 1)], "pk int, ver int")
     vs = [ts.commit(df, path, retain=5) for _ in range(8)]
+    assert sorted(ts.LocalCASArbiter().committed(path)) == list(range(3, 9))
     # every snapshot inside the retention window stays committed AND
-    # readable by explicit version despite aggressive log compaction
+    # readable by explicit version despite aggressive log pruning
     for v in vs[-5:]:
         assert ts.read_state(spark, path, v).count() == 1
     assert len(ts.list_versions(path)) >= 5
+
+
+@pytest.mark.parametrize("arbiter", ["local", "object"])
+def test_table_directory_holds_one_commit_record(spark, tmp_path, arbiter):
+    """The arbiter log is a table's only commit record: after flat and
+    bucketed merges the table directory holds the retained ``v-*``
+    snapshots, the local arbiter's ``_commits/`` and, when bucketed,
+    ``_BUCKETING`` — nothing else. The object-store arbiter keeps its log
+    in the store, so there the directory holds no ``_commits/`` either."""
+    import os
+
+    from realtime_datawarehouse_spark.operators import object_store
+
+    ts = table_store
+    prev = ts._ARBITER
+    if arbiter == "object":
+        ts.set_arbiter(
+            object_store.ObjectStoreCASArbiter(
+                object_store.InMemoryObjectStore()
+            )
+        )
+    try:
+        for buckets in (None, 4):
+            path = str(tmp_path / f"buckets{buckets}")
+            for i in range(3):
+                ts.merge_upsert(
+                    spark,
+                    spark.createDataFrame([(str(i), i)], "pk string, ver int"),
+                    path, pk="pk", version_col="ver", buckets=buckets,
+                )
+            snapshots = ts.list_versions(path)
+            assert len(snapshots) == 2  # retain=2
+            expected = set(snapshots)
+            if arbiter == "local":
+                expected.add("_commits")
+                assert sorted(os.listdir(os.path.join(path, "_commits"))) == [
+                    f"{s:010d}" for s in (1, 2, 3)
+                ]
+            if buckets:
+                expected.add("_BUCKETING")
+            assert set(os.listdir(path)) == expected
+            assert ts.read_state(spark, path).count() == 3
+    finally:
+        ts.set_arbiter(prev)
 
 
 def test_commit_claim_directories_never_collide(spark, tmp_path):
@@ -1139,53 +1162,6 @@ def test_bucketed_subset_schema_batch_keeps_pruned_path(spark, tmp_path):
     assert shared >= 6, shared  # 1 pk touches ≤1 of 8 buckets
 
 
-def test_flip_log_seeded_across_upgrade_boundary(spark, tmp_path):
-    """ADVICE r5 #5 carried into the arbiter era: the first new-code
-    commit on a pre-flip-log, PRE-ARBITER table (no _FLIPS, no _commits —
-    the head falls back to the legacy _CURRENT pointer) seeds _FLIPS with
-    the existing snapshots, so explicit-version read_state on a retained
-    pre-log snapshot keeps working and GC never demotes it to the orphan
-    path."""
-    import os
-    import shutil
-
-    ts = table_store
-    path = str(tmp_path / "t")
-    import time
-
-    df1 = spark.createDataFrame([("1", 1)], "pk string, ver int")
-    df2 = spark.createDataFrame([("2", 2)], "pk string, ver int")
-    v1 = ts.commit(df1, path, retain=4)
-    v2 = ts.commit(df2, path, retain=4)
-    assert ts.current_version(path) == v2  # derived from the arbiter log
-    os.unlink(os.path.join(path, "_FLIPS"))  # simulate a pre-log table
-    shutil.rmtree(os.path.join(path, "_commits"))  # ...and pre-arbiter
-    assert ts.current_version(path) == v2  # legacy-pointer fallback
-    # a real pre-log table's snapshots predate the upgrade by far more
-    # than the orphan grace — the seed's age guard (which exists so a
-    # concurrent writer's YOUNG in-flight claim is never marked flipped)
-    # must not exclude them
-    past = time.time() - ts._ORPHAN_GRACE_S - 60
-    for d in (v1, v2):
-        os.utime(os.path.join(path, d), (past, past))
-    # a young unflipped claim below the pointer (a stalled pre-upgrade
-    # writer) must NOT be seeded — it keeps its orphan-grace protection
-    stalled = os.path.join(path, "v-0000000000")
-    os.mkdir(stalled)
-    v3 = ts.commit(
-        spark.createDataFrame([("3", 3)], "pk string, ver int"),
-        path, retain=4,
-    )
-    logged = ts._flipped_versions(path)
-    assert {v1, v2, v3} <= logged
-    assert "v-0000000000" not in logged  # in-flight claim left unflipped
-    assert os.path.isdir(stalled)  # and not GC'd
-    # explicit time travel onto the pre-log snapshots still works
-    assert ts.read_state(spark, path, v2).collect()[0].pk == "2"
-    assert ts.read_state(spark, path, v1).collect()[0].pk == "1"
-    assert set(ts.list_versions(path)) >= {v1, v2, v3}
-
-
 def test_arbiter_concurrent_overlap_commit_log_dense_and_lossless(
     spark, tmp_path
 ):
@@ -1228,7 +1204,7 @@ def test_arbiter_concurrent_overlap_commit_log_dense_and_lossless(
     assert len(set(committed.values())) == 24  # no version committed twice
     final = ts.current_version(path)
     assert final == committed[24]
-    assert final in (ts._flipped_versions(path) or set())
+    assert final in ts.list_versions(path)
     rows = ts.read_state(spark, path).collect()  # whole, readable snapshot
     assert len(rows) == 1 and rows[0].pk.count("-") == 1
 
@@ -1475,27 +1451,6 @@ def test_gc_rename_aside_sweeps_crashed_leftovers(spark, tmp_path):
     assert not os.path.exists(leftover)
     assert not os.path.exists(orphan)
     assert not [e for e in os.listdir(path) if e.startswith(".gc.")]
-    assert [r.pk for r in ts.read_state(spark, path).collect()] == ["1"]
-
-
-def test_current_cache_replace_skipped_when_cache_is_newer(spark, tmp_path):
-    """ADVICE r7: the _CURRENT cache's derive-then-write now SKIPS the
-    replace when the cache already names a version newer than the
-    derived head — a stale writer can no longer move the advisory
-    pointer backward. (Arbiter-era readers never read the cache; this
-    protects only pre-arbiter tooling.)"""
-    import os
-
-    ts = table_store
-    path = str(tmp_path / "t")
-    ts.commit(spark.createDataFrame([("0", 0)], "pk string, ver int"), path)
-    # a newer writer's cache value lands first
-    with open(ts._pointer_path(path), "w", encoding="utf-8") as f:
-        f.write("v-9999999990")
-    ts.commit(spark.createDataFrame([("1", 1)], "pk string, ver int"), path)
-    with open(ts._pointer_path(path), encoding="utf-8") as f:
-        assert f.read().strip() == "v-9999999990"  # not regressed
-    # the real head is still DERIVED, so readers are unaffected
     assert [r.pk for r in ts.read_state(spark, path).collect()] == ["1"]
 
 

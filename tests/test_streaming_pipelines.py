@@ -1010,6 +1010,30 @@ def test_traffic_column_recovers_from_a_task_failure_in_the_uv_hop(
     _assert_serves_uninterrupted_result(spark, tmp_path, batches)
 
 
+def test_traffic_column_merges_only_batches_with_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A last-hop micro-batch whose windows have not closed carries no
+    rows and must not reach ``merge_upsert``: committing it would write
+    an unchanged version. Skipping it leaves the served result as the
+    uninterrupted batch computation."""
+    from realtime_datawarehouse_spark.operators import table_store as ts
+
+    real_merge = ts.merge_upsert
+    rows_per_merge = []
+
+    def counting_merge(spark, incoming, path, **kw):
+        rows_per_merge.append(incoming.count())
+        return real_merge(spark, incoming, path, **kw)
+
+    batches = _crash_batches()
+    monkeypatch.setattr(ts, "merge_upsert", counting_merge)
+    _feed_traffic_column(spark, tmp_path, batches)
+    monkeypatch.undo()
+    assert rows_per_merge and min(rows_per_merge) > 0, rows_per_merge
+    _assert_serves_uninterrupted_result(spark, tmp_path, batches)
+
+
 # a later raw batch LARGER than the first: its boundary file sorts ahead
 # of the first batch's when one trigger reads both (the file scan packs
 # files largest first), so only a commit-ordered read keeps the first
@@ -1689,12 +1713,14 @@ def test_production_ingest_bucketed_matches_flat(
 ):
     """Round 10 (extended round 12 to the 7-table loop): the composed
     loop's standing tables — sigs/flags/comps/ivf/quality PLUS the
-    round-12 BPE encodings — merged with ``buckets=4`` (touched-bucket
-    rewrite + hardlinks, the O(batch) deployment layout) across a
-    multi-batch history INCLUDING a replayed batch must end
-    row-identical to the uninterrupted flat O(table) layout —
+    round-12 BPE encodings — merged with ``buckets=4`` (the bucketed
+    deployment layout) across a multi-batch history INCLUDING a replayed
+    batch must end row-identical to the uninterrupted flat layout —
     bucket-local last-write-wins is the same merge, just partitioned,
-    and the replay changes nothing."""
+    and the replay changes nothing. Every merge here touches all 4
+    buckets, so this pins layout parity only; bucket pruning and the
+    hardlinked untouched buckets are pinned by the bucketed merge tests
+    in tests/test_sinks_serving.py."""
     from realtime_datawarehouse_spark.operators import table_store
     from realtime_datawarehouse_spark.streaming import pipelines
 
