@@ -34,6 +34,7 @@ from realtime_datawarehouse_spark.functions.hashing import (
     permutation_params,
 )
 from realtime_datawarehouse_spark.functions.text import tokenize, word_shingles
+from realtime_datawarehouse_spark.operators.layout import rebalance_narrow_scan
 
 NUM_PERM = 16
 BANDS = 4
@@ -60,10 +61,6 @@ WITH docs AS (
 
 def doc_shingles(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """documents → (doc_id, shingle, n_shingles), distinct shingles per doc."""
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # Shingling is the CPU amplifier of every dedup pipeline (~Ntokens×
     # rows out, md5 per shingle); a narrow scan (few unsplittable files)
     # would run it near-serially, so rebalance first (no-op when the scan
@@ -1013,10 +1010,6 @@ DECON_N = 4
 def _shingle_hashes_n(docs: DataFrame, n: int, extra_cols: list[str]):
     """(…extra_cols, h): distinct n-word shingle hashes per doc (general-n
     variant of doc_shingle_hashes; same rebalance + no-prefilter rules)."""
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     docs = rebalance_narrow_scan(docs)
     with_sh = docs.select(
         *extra_cols,
@@ -1308,10 +1301,6 @@ def bloom_decontaminate(
     UDF; the semi-join form keeps the hot path in codegen and its
     semantics engine-portable.
     """
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     docs = rebalance_narrow_scan(docs)
     sh = docs.select(
         "doc_id",

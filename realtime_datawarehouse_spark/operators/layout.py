@@ -1,4 +1,5 @@
-"""Physical layout: bucketed tables for shuffle-free co-located joins.
+"""Physical layout: bucketed tables for shuffle-free co-located joins, and
+the one narrow-scan rule.
 
 The reference co-locates stream joins by Kafka-partitioning both topics on
 the join key (implicit in Flink's keyBy). The batch-warehouse equivalent is
@@ -12,6 +13,13 @@ Bucket-count guidance at scale: pick ``buckets ≈ table_size /
 target_partition_size`` (128–512 MB each) and use the SAME count on tables
 that join together (Spark requires equal bucket counts to elide the
 shuffle).
+
+Narrow scans (``rebalance_narrow_scan``): every CPU-heavy operator calls
+the same rule on its input, with no per-call option. An input that lists
+fewer files than the session's default parallelism is round-robin
+redistributed to that parallelism; a wider one passes through. The rule
+reads the plan's file list only, so it never runs a job while a query is
+being built.
 """
 
 from __future__ import annotations
@@ -41,63 +49,40 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def rebalance_narrow_scan(
-    df: DataFrame,
-    min_bytes: int = 0,
-) -> DataFrame:
-    """Round-robin-redistribute a scan that has fewer partitions than the
-    session's parallelism, so CPU-amplifying operators downstream (shingle
-    explode + hashing, vector folds, Arrow decode kernels) run at full
-    width.
+def rebalance_narrow_scan(df: DataFrame) -> DataFrame:
+    """The engine's one narrow-scan rule: round-robin-redistribute ``df``
+    to the session's default parallelism unless ``df.inputFiles()``
+    already lists that many files, so CPU-amplifying operators
+    downstream (tokenize + explode, shingle hashing, vector folds) run at
+    full width.
 
     This is the unsplittable-input failure mode: a parquet file is
     parallelized at ROW-GROUP granularity, so a few single-row-group files
     (or gzip blobs) feed any downstream pipeline at parallelism ≈ file
     count no matter how many cores the cluster has. The one-time shuffle
-    moves only the raw scan rows — orders of magnitude less data than what
-    the downstream explode/codec produces from them. When the scan already
-    has at least the session's default parallelism in partitions (the
-    healthy 100 TB layout), this is a no-op: no shuffle is added.
+    moves only the input rows — orders of magnitude less data than what
+    the downstream explode/codec produces from them. An input that
+    already lists that many files (the healthy 100 TB layout) comes back
+    unchanged: no shuffle is added.
 
-    ``min_bytes`` (r14): for operators whose per-row map work is LIGHT
-    (a plain tokenize+count, one small explode), the redistribution
-    shuffle only pays for itself once the narrow input is big enough that
-    serial map time dominates it — below that the query is already
-    sub-second and the exchange is pure overhead (measured at sf0.1:
-    u1_tokenize 0.19 → 0.45 s WITH an unconditional rebalance, while the
-    same op at sf1 goes 0.94 → 0.45 s). Callers with light amplification
-    pass ``min_bytes=REBALANCE_LIGHT_MIN_BYTES``: the rebalance engages
-    only when the optimizer's size estimate for the input exceeds it —
-    scale-adaptive (derived from input size), not a fixed-SF tuning.
-    Heavy-amplification callers (per-char explodes, |corpus|×|centroids|
-    scoring) keep the unconditional form — measured wins at every scale.
+    Why the file list and not the partition count: a derived input's
+    partition count is known only once AQE has run its stages, so probing
+    it (``df.rdd.getNumPartitions()``) runs Spark jobs while the query is
+    being built — 72 jobs (8.0 s) over the 145 calls made building all
+    285 registered queries at sf0.1 on 4 cores. The file list comes from
+    the optimized plan and runs none.
+
+    Why no size floor: a 2 MB size-estimate floor for "light" operators,
+    with its crossover measured on 32 cores, was slower on 4 cores on
+    every query timed (sf0.1 medians, floor → no floor:
+    u1_tokenize_explode_count 0.168 → 0.108 s, text_unigram_logprob
+    0.409 → 0.281 s, text_substring_dedup 0.902 → 0.681 s,
+    text_token_count 0.142 → 0.114 s).
     """
-    if min_bytes:
-        try:
-            est = int(
-                str(
-                    df._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-            if est < min_bytes:
-                return df
-        except Exception:
-            pass  # no estimate → fall through to the partition-count rule
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    if len(df.inputFiles()) >= target:
         return df
     return df.repartition(target)
-
-
-# Crossover for LIGHT-map-work callers of rebalance_narrow_scan: measured
-# between sf0.1 (documents estimate 0.25-0.59 MB depending on projection;
-# rebalance LOSES ~2x there) and sf1 (2.6-6.0 MB; rebalance WINS ~2x) —
-# see OPTIMIZATION_r14.md §11. Estimates come from the optimizer's
-# sizeInBytes, which for a bare parquet scan tracks the file size.
-REBALANCE_LIGHT_MIN_BYTES = 2 << 20
 
 
 def zorder_key(cols: list, bits: int = 16):

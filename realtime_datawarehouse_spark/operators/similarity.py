@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from realtime_datawarehouse_spark.functions.compare import pround, pround_sql
 from realtime_datawarehouse_spark.functions.vector import dot, l2_norm
+from realtime_datawarehouse_spark.operators.layout import rebalance_narrow_scan
 
 NUM_PLANES = 8
 DIM = 64
@@ -66,10 +67,6 @@ def brute_topk(
     The query side is broadcast — the corpus never shuffles; the only wide
     operation is the per-query top-k window over candidate rows.
     """
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # r14: the |corpus| × |queries| cosine fan-out runs at the SCAN's
     # parallelism — a single-row-group embeddings file fed it 1-2 tasks
     # regardless of core count (the same narrow-scan failure mode as
@@ -331,9 +328,6 @@ def ivf_assign(
     """
     if centroids is None:
         centroids = _ivf_centroids(emb)
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
 
     # r14: the |corpus| × |centroids| scoring fan-out (the arithmetic
     # codebook is |corpus|/61 centroids, so this is quadratic-ish) ran at
@@ -775,10 +769,6 @@ def sem_lsh_assign(emb: DataFrame) -> DataFrame:
     bucket expression (declarative — no driver-side count action), so the
     SAME plan stays near-linear from sf0.001 through 100 TB: buckets
     multiply with the data while per-bucket work stays constant."""
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # r14: up to SEM_LSH_MAX_PLANES 32-dim fold products per vector ran
     # at the scan's parallelism (narrow-scan failure mode; no-op on wide
     # scans).
@@ -1245,10 +1235,6 @@ def pq_encode(emb: DataFrame) -> DataFrame:
     (vec_id, codes) — M bytes of payload per vector — and every query
     thereafter scans codes only; the n×M-row exchanges here amortize over
     the index lifetime exactly like the IVF layout write."""
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # r14: the M-subspace × K-codeword argmin encode ran at the scan's
     # parallelism (narrow-scan failure mode; no-op on wide scans).
     es = rebalance_narrow_scan(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from realtime_datawarehouse_spark.functions.compare import pround, pround_sql
 from realtime_datawarehouse_spark.functions.hashing import hash64, hash64_sql
 from realtime_datawarehouse_spark.functions.text import STOPWORDS, tokenize
+from realtime_datawarehouse_spark.operators.layout import rebalance_narrow_scan
 
 # Rolling-hash modulus: acc < 2^31 keeps (acc*31 + h60) < 2^61 — no int64
 # overflow on either engine (Spark runs ANSI mode; overflow would throw).
@@ -43,17 +44,7 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, token_ct, bpe_ish_ct, char_ct): whitespace token count, the
     BPE-ish pre-token count (the better LLM-cost proxy — punctuation and
     digit runs count as their own tokens), and character length."""
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
-    # r14: LIGHT per-row map work — bytes-gated narrow-scan redistribution
-    # (engages at sf1-class narrow inputs, stays out of the way below the
-    # crossover; no-op on wide scans — OPTIMIZATION_r14.md §11).
-    docs = rebalance_narrow_scan(
-        docs, min_bytes=layout.REBALANCE_LIGHT_MIN_BYTES
-    )
+    docs = rebalance_narrow_scan(docs)
     toks = tokenize(text_col)
     bpe = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(BPE_ISH_RE), 0)
     return docs.select(
@@ -87,10 +78,6 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic quality signals: token count, stopword ratio, mean token
     length, and a composite keep/drop flag — the standard cheap pre-filter
     stage of a corpus pipeline."""
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # r14: CPU-amplifying map work over the raw scan — parallelize a
     # narrow (few-row-group) input first; no-op on wide scans
     # (OPTIMIZATION_r14.md §9/§11).
@@ -139,17 +126,7 @@ FROM m
 
 def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Marker-token language ID with fixed precedence en > de > es."""
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
-    # r14: LIGHT per-row map work — bytes-gated narrow-scan redistribution
-    # (engages at sf1-class narrow inputs, stays out of the way below the
-    # crossover; no-op on wide scans — OPTIMIZATION_r14.md §11).
-    docs = rebalance_narrow_scan(
-        docs, min_bytes=layout.REBALANCE_LIGHT_MIN_BYTES
-    )
+    docs = rebalance_narrow_scan(docs)
     toks = tokenize(text_col)
 
     def marker_filter(markers: tuple[str, ...]):
@@ -206,17 +183,7 @@ FROM s
 def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Order-sensitive rolling-hash document fingerprint:
     fold((acc*31 + hash64(token)) mod FP_MOD) over the token sequence."""
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
-    # r14: LIGHT per-row map work — bytes-gated narrow-scan redistribution
-    # (engages at sf1-class narrow inputs, stays out of the way below the
-    # crossover; no-op on wide scans — OPTIMIZATION_r14.md §11).
-    docs = rebalance_narrow_scan(
-        docs, min_bytes=layout.REBALANCE_LIGHT_MIN_BYTES
-    )
+    docs = rebalance_narrow_scan(docs)
     toks = tokenize(text_col)
     hashes = F.transform(toks, lambda t: hash64(t))
     fp = F.aggregate(
@@ -247,18 +214,7 @@ def tokenize_explode_count(docs: DataFrame, text_col: str = "text") -> DataFrame
     """U1 analog: tokenize + explode (≡ LATERAL TABLE(ik_analyze(...))) then
     count per keyword (rt/app/func/KeywordUDTF.java:14-22 +
     rt/app/dws/DwsTrafficSourceKeywordPageViewWindow.java:55-69)."""
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
-    # r14: LIGHT per-row map work — redistribute a narrow scan only when
-    # the input is big enough that serial map time beats the one-time
-    # shuffle (bytes-gated; measured crossover in OPTIMIZATION_r14.md
-    # §11). No-op on wide scans at any size.
-    docs = rebalance_narrow_scan(
-        docs, min_bytes=layout.REBALANCE_LIGHT_MIN_BYTES
-    )
+    docs = rebalance_narrow_scan(docs)
     return (
         docs.select(F.explode(tokenize(text_col)).alias("keyword"))
         .groupBy("keyword")
@@ -373,9 +329,6 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Measured 1.2 s → map-stage-only at bench sf0.1.
     """
     from realtime_datawarehouse_spark.functions.text import word_shingles
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
 
     # the bigram build is a CPU amplifier over a (typically) narrow
     # single-row-group scan — widen first (no-op on already-wide scans)
@@ -519,18 +472,7 @@ def unigram_logprob(
     data-dependent literals, so the libm-agreement assumption is accepted
     and documented instead.
     """
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
-    # r14: LIGHT per-row map work — redistribute a narrow scan only when
-    # the input is big enough that serial map time beats the one-time
-    # shuffle (bytes-gated; measured crossover in OPTIMIZATION_r14.md
-    # §11). No-op on wide scans at any size.
-    docs = rebalance_narrow_scan(
-        docs, min_bytes=layout.REBALANCE_LIGHT_MIN_BYTES
-    )
+    docs = rebalance_narrow_scan(docs)
     toks = docs.select("doc_id", F.explode(tokenize(text_col)).alias("tok"))
     counts = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
@@ -622,9 +564,6 @@ def bigram_logprob(
     from the output on both engines.
     """
     from realtime_datawarehouse_spark.functions.text import word_shingles
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
 
     # r14: the tokenize+bigram explode is this query's CPU center and ran
     # at the SCAN's parallelism — a single-row-group documents file fed it
@@ -841,10 +780,6 @@ def quality_classifier(
     contract on purpose (transcendental libm results differ across
     engines in the last ulp).
     """
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # md5-per-token is a CPU amplifier over a (typically) narrow scan —
     # widen first (measured 0.75→0.55 s warm at bench sf0.1; the same
     # A/B shows no win for paragraph_dedup, which stays unrebalanced)
@@ -1151,17 +1086,7 @@ def token_budget_sample(
     (source, key-range) token subtotals to locate the cut point and
     broadcast it — same contract, two cheap passes.
     """
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
-    # r14: LIGHT per-row map work — bytes-gated narrow-scan redistribution
-    # (engages at sf1-class narrow inputs, stays out of the way below the
-    # crossover; no-op on wide scans — OPTIMIZATION_r14.md §11).
-    docs = rebalance_narrow_scan(
-        docs, min_bytes=layout.REBALANCE_LIGHT_MIN_BYTES
-    )
+    docs = rebalance_narrow_scan(docs)
     from pyspark.sql import Window
 
     n_tok = F.size(tokenize("text"))
@@ -1231,9 +1156,6 @@ def ngram_topk(
     from pyspark.sql import Window
 
     from realtime_datawarehouse_spark.functions.text import word_shingles
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
 
     docs = rebalance_narrow_scan(docs)
     grams = docs.select(
@@ -1286,17 +1208,7 @@ def chunk_documents(
     sequence/slice expressions — per-row work, no shuffle at all, and the
     output count is ~tokens/stride rows per doc. At 100 TB this runs as a
     map-only stage writing straight to the chunk store."""
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
-    # r14: LIGHT per-row map work — bytes-gated narrow-scan redistribution
-    # (engages at sf1-class narrow inputs, stays out of the way below the
-    # crossover; no-op on wide scans — OPTIMIZATION_r14.md §11).
-    docs = rebalance_narrow_scan(
-        docs, min_bytes=layout.REBALANCE_LIGHT_MIN_BYTES
-    )
+    docs = rebalance_narrow_scan(docs)
     stride = size - overlap
     if stride <= 0:
         raise ValueError("overlap must be smaller than size")
@@ -1358,10 +1270,6 @@ def tfidf_top_terms(docs: DataFrame, k: int = TFIDF_K) -> DataFrame:
     unigram_logprob; ties then break on the term string, so rank is
     deterministic given that assumption)."""
     from pyspark.sql import Window
-
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
 
     docs = rebalance_narrow_scan(docs)
     t = docs.select("doc_id", F.explode(tokenize("text")).alias("term"))
@@ -1732,10 +1640,6 @@ def cdc_chunks(
     text first (sanitization is part of the operator contract, mirrored
     in the oracle) so no token can collide with the sentinel.
     """
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # r14: CPU-amplifying map work over the raw scan — parallelize a
     # narrow (few-row-group) input first; no-op on wide scans
     # (OPTIMIZATION_r14.md S9/S11).
@@ -1951,9 +1855,6 @@ def dup_ngram_coverage(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from pyspark.sql import Window
 
     from realtime_datawarehouse_spark.functions.text import word_shingles
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
 
     # r14: the positional-shingle + md5 explode ran at the scan's
     # parallelism (sf1: 6.3 s at 32c ≈ 6.8 s at 8c). No-op on wide scans.
@@ -2078,10 +1979,6 @@ def shared_substring_runs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     100 TB: identical cost shape to dup_ngram_coverage — the gram-hash
     exchange dominates and is the only corpus-wide shuffle; the fold is
     map-side, per-doc."""
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # r14: CPU-amplifying map work over the raw scan — parallelize a
     # narrow (few-row-group) input first; no-op on wide scans
     # (OPTIMIZATION_r14.md S9/S11).
@@ -2225,9 +2122,6 @@ def dsir_weights(
     same production fix: materialize the tiny weight table once from one
     engine)."""
     from realtime_datawarehouse_spark.functions.text import word_shingles
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
 
     # r14: both histogram and scorer consume this tokenize+bigram+md5
     # explode — the query's CPU center — and it ran at the scan's
@@ -2345,18 +2239,7 @@ def substring_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     covered exactly by its L−n+1 duplicated grams for L ≥ n), which is
     the standard streaming-friendly relaxation.
     """
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
-    # r14: LIGHT per-row map work — redistribute a narrow scan only when
-    # the input is big enough that serial map time beats the one-time
-    # shuffle (bytes-gated; measured crossover in OPTIMIZATION_r14.md
-    # §11). No-op on wide scans at any size.
-    docs = rebalance_narrow_scan(
-        docs, min_bytes=layout.REBALANCE_LIGHT_MIN_BYTES
-    )
+    docs = rebalance_narrow_scan(docs)
     from pyspark.sql import Window
 
     from realtime_datawarehouse_spark.functions.text import word_shingles
@@ -3171,10 +3054,6 @@ def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     rollup summing per-character −(c/n)·ln(c/n) terms 1e-6-quantized
     BEFORE the int64 sum (order-free; the quantize-after-ln libm caveat
     of unigram_logprob applies)."""
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
-    )
-
     # r14: CPU-amplifying map work over the raw scan — parallelize a
     # narrow (few-row-group) input first; no-op on wide scans
     # (OPTIMIZATION_r14.md S9/S11).

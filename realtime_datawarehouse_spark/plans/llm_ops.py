@@ -19,6 +19,7 @@ from realtime_datawarehouse_spark.operators import (
     similarity,
     textops,
 )
+from realtime_datawarehouse_spark.operators.layout import rebalance_narrow_scan
 from realtime_datawarehouse_spark.plans.registry import query
 from realtime_datawarehouse_spark.streaming import pipelines as _pipelines
 from realtime_datawarehouse_spark.tables import table
@@ -3901,9 +3902,6 @@ def text_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime_datawarehouse_spark.functions.text import (
         tokenize,
         word_shingles,
-    )
-    from realtime_datawarehouse_spark.operators.layout import (
-        rebalance_narrow_scan,
     )
 
     # r14: the shingle-hash + W-way sliding-min map work ran at the

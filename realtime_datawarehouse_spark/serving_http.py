@@ -28,8 +28,9 @@ Endpoints (same routes, params, and payload shapes as the reference):
         reads, no Spark jobs; requires loop_paths)
 
 Like the reference, an absent/zero ``date`` defaults to today
-(DateFormatUtil.now()). Unknown routes return 404; a missing, non-integer
-or out-of-range ``vec_id``/``k``/``doc_id`` returns 400; any other handler
+(DateFormatUtil.now()); any other ``date`` that is not 8 digits, a
+missing, non-integer or out-of-range ``vec_id``/``k``/``doc_id``, and a
+``k`` below 1 return 400. Unknown routes return 404; any other handler
 error is logged with its traceback and answered HTTP 500
 {"status": 1, "msg": "internal error"} (the cause, often a Java stack
 trace, stays out of the reply).
@@ -45,6 +46,7 @@ from __future__ import annotations
 
 import json
 import logging
+import re
 import threading
 from datetime import date as _date
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -79,6 +81,15 @@ def _int_param(
     if not -(2**63) <= value < 2**63:  # a Spark bigint literal
         raise _BadRequest(f"{name} is outside the 64-bit range")
     return value
+
+
+def _date_param(q: dict[str, list[str]]) -> str:
+    date = q.get("date", ["0"])[0]
+    if date in ("", "0"):  # reference: defaultValue=0 → now()
+        return _today()
+    if not re.fullmatch(r"[0-9]{8}", date):
+        raise _BadRequest("date must be yyyyMMdd")
+    return date
 
 
 def make_server(
@@ -131,22 +142,24 @@ def make_server(
         def do_GET(self) -> None:  # noqa: N802 — http.server API
             url = urlparse(self.path)
             q = parse_qs(url.query)
-            date = q.get("date", ["0"])[0]
-            if date in ("", "0"):  # reference: defaultValue=0 → now()
-                date = _today()
             try:
                 if url.path == "/gmv":
-                    self._reply(200, serving.gmv(spark, sf_dir, date))
+                    self._reply(200, serving.gmv(spark, sf_dir, _date_param(q)))
                 elif url.path == "/province":
-                    self._reply(200, serving.province_stats(spark, sf_dir, date))
+                    self._reply(
+                        200, serving.province_stats(spark, sf_dir, _date_param(q))
+                    )
                 elif url.path == "/similar":
+                    k = _int_param(q, "k", 5)
+                    if k < 1:
+                        raise _BadRequest("k must be at least 1")
                     self._reply(
                         200,
                         serving.similar(
                             spark,
                             sf_dir,
                             _int_param(q, "vec_id"),
-                            k=_int_param(q, "k", 5),
+                            k=k,
                             index_path=ann_index_path,
                             centroids=ann_centroids,
                         ),

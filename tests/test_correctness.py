@@ -288,7 +288,7 @@ def test_compression_ratio_oracle(spark):
         assert got[row.doc_id] == (r, comp, ratio6), row.doc_id
 
 
-def test_cdc_chunks_shift_robustness(spark):
+def test_cdc_chunks_shift_robustness(spark, tmp_path):
     """The point of content-defined chunking: inserting one sentence near
     the head must leave the chunk-hash set mostly intact (boundaries
     re-synchronize), where fixed-size chunking would shift every window."""
@@ -317,8 +317,16 @@ def test_cdc_chunks_shift_robustness(spark):
     pairs = {(r.doc_a, r.doc_b) for r in dedup.cdc_minhash_pairs(docs).collect()}
     assert (1, 2) in pairs
 
-    # plan shape: the chunk fold is per-row — no exchange before the explode
-    plan = textops.cdc_chunks(docs)._jdf.queryExecution().executedPlan().toString()
+    # plan shape: the chunk fold is per-row — no exchange before the
+    # explode. Built over an input of defaultParallelism files, which the
+    # narrow-scan rule passes through, so any exchange is the fold's own.
+    wide = str(tmp_path / "docs")
+    for _ in range(spark.sparkContext.defaultParallelism):
+        docs.coalesce(1).write.mode("append").parquet(wide)
+    plan = (
+        textops.cdc_chunks(spark.read.parquet(wide))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
     assert "Exchange" not in plan, plan
 
 

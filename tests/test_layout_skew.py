@@ -350,30 +350,85 @@ def test_hive_partitioned_write_prunes_partitions(spark, tmp_path):
     assert len(glob.glob(f"{path}/dt=*")) == n_days
 
 
-def test_rebalance_narrow_scan_bytes_gate(spark):
-    """r14: rebalance_narrow_scan(min_bytes=...) engages only when the
-    optimizer's size estimate exceeds the bar — light-map-work operators
-    (u1_tokenize, unigram_logprob, substring_dedup) pay the redistribution
-    shuffle only where serial map time would dominate it (measured
-    crossover: sf0.1 rebalance loses ~2x, sf1 wins ~2x —
-    OPTIMIZATION_r14.md §11)."""
-    from realtime_datawarehouse_spark.operators import layout
-    from realtime_datawarehouse_spark.tables import table
+def test_rebalance_narrow_scan_rule(spark, tmp_path):
+    """The one narrow-scan rule: an input that lists fewer files than the
+    session's default parallelism is round-robin redistributed to it,
+    and the decision runs no Spark job, even on a derived input whose
+    partition count only AQE would know."""
+    target = spark.sparkContext.defaultParallelism
+    docs = table(spark, SF_DIR, "documents")
 
-    docs = table(spark, SF_DIR, "documents")  # tiny: far under any bar
-    narrow = docs.coalesce(1)
-    # gated: estimate below min_bytes -> identity (same plan object result)
-    gated = layout.rebalance_narrow_scan(narrow, min_bytes=1 << 30)
-    assert gated is narrow
-    # ungated: narrow scan is redistributed to session parallelism
-    wide = layout.rebalance_narrow_scan(narrow)
-    assert (
-        wide.rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
-    # a tiny min_bytes engages the same way as the unconditional form
-    wide2 = layout.rebalance_narrow_scan(narrow, min_bytes=1)
-    assert wide2.rdd.getNumPartitions() == wide.rdd.getNumPartitions()
-    # the shared constant the light callers use exists and sits between
-    # the measured sf0.1 (<1 MB) and sf1 (>2.5 MB) estimates
-    assert 1 << 20 <= layout.REBALANCE_LIGHT_MIN_BYTES <= 3 << 20
+    # (a) a semi-join against an aggregate over the fixture
+    firsts = docs.groupBy("source").agg(F.min("doc_id").alias("doc_id"))
+    derived = docs.join(firsts, "doc_id", "left_semi")
+    sc = spark.sparkContext
+    sc.setJobGroup("narrow-scan-rule", "narrow-scan-rule")
+    try:
+        out = layout.rebalance_narrow_scan(derived)
+    finally:  # the session is shared: clear what setJobGroup set
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("narrow-scan-rule")) == []
+    plan = _plan(spark, out)
+    assert plan.count("RoundRobinPartitioning(") == 1, plan
+    assert f"RoundRobinPartitioning({target})" in plan, plan
+
+    # (b) a directory of at least `target` files is already wide
+    path = str(tmp_path / "wide")
+    docs.repartition(target).write.parquet(path)
+    wide = spark.read.parquet(path)
+    assert len(wide.inputFiles()) >= target
+    assert layout.rebalance_narrow_scan(wide) is wide
+
+    # (c) the one-file fixture scan is redistributed
+    assert len(docs.inputFiles()) == 1
+    plan = _plan(spark, layout.rebalance_narrow_scan(docs))
+    assert f"RoundRobinPartitioning({target})" in plan, plan
+
+
+# Registered queries whose CPU-heavy operator reads the raw fixture scan
+# through rebalance_narrow_scan: the ten whose operator used to skip
+# small inputs, then the single-operator heavy ones.
+NARROW_SCAN_QUERIES = [
+    "u1_tokenize_explode_count",
+    "text_token_count",
+    "text_lang_id",
+    "text_lang_confusion",
+    "text_fingerprint",
+    "text_unigram_logprob",
+    "text_perplexity_buckets",
+    "mix_token_budget_sample",
+    "text_chunk_documents",
+    "text_substring_dedup",
+    "ann_brute_topk",
+    "curate_bloom_decontaminate",
+    "text_bigram_logprob",
+    "text_cdc_chunks",
+    "text_char_entropy",
+    "text_dup_ngram_coverage",
+    "text_ngram_topk",
+    "text_quality_classifier",
+    "text_quality_score",
+    "text_repetition_signals",
+    "text_shared_substring_runs",
+    "text_tfidf_top_terms",
+    "text_winnowing_fingerprint",
+]
+
+
+@pytest.mark.parametrize("name", NARROW_SCAN_QUERIES)
+def test_heavy_query_redistributes_narrow_scan(spark, name):
+    """Plan only, nothing executed: each query's plan over the one-file
+    fixture carries the rule's round-robin exchange. A missing call
+    leaves its heavy operator at one task per input file."""
+    from realtime_datawarehouse_spark.plans import registry
+
+    registry.load()
+    df = registry.QUERIES[name](spark, SF_DIR)
+    target = spark.sparkContext.defaultParallelism
+    plan = _plan(spark, df)
+    assert f"RoundRobinPartitioning({target})" in plan, plan

@@ -118,11 +118,19 @@ def test_http_similar_missing_vec_id_400(ads_server):
         ("quality?doc_id=1.5", "doc_id must be an integer"),
         ("encode?doc_id=x", "doc_id must be an integer"),
         ("similar?vec_id=" + "9" * 20, "vec_id is outside the 64-bit range"),
+        ("similar?vec_id=3&k=0", "k must be at least 1"),
+        ("similar?vec_id=3&k=-2", "k must be at least 1"),
+        ("gmv?date=2024-01-01", "date must be yyyyMMdd"),
+        ("gmv?date=2024010", "date must be yyyyMMdd"),
+        ("province?date=abc", "date must be yyyyMMdd"),
+        ("province?date=202401011", "date must be yyyyMMdd"),
     ],
 )
 def test_http_malformed_integer_param_400(ads_server, query, msg):
-    """A malformed integer parameter is the caller's error: 400 naming
-    the parameter, not a 500 echoing the parser's or the JVM's exception."""
+    """A malformed parameter is the caller's error: 400 naming the
+    parameter, not a 500 echoing the parser's or the JVM's exception, and
+    not a 200 with an empty answer for a date no row can carry or a k
+    that asks for no neighbour."""
     import urllib.error
 
     with pytest.raises(urllib.error.HTTPError) as ei:
@@ -132,6 +140,24 @@ def test_http_malformed_integer_param_400(ads_server, query, msg):
         "status": 1,
         "msg": msg,
     }
+
+
+@pytest.mark.parametrize(
+    "route, fn", [("gmv", "gmv"), ("province", "province_stats")]
+)
+@pytest.mark.parametrize("date", ["", "0"])
+def test_http_empty_or_zero_date_means_today(
+    ads_server, monkeypatch, route, fn, date
+):
+    """An empty or zero ``date`` still defaults to today, as in the
+    reference (DateFormatUtil.now())."""
+    seen = []
+    monkeypatch.setattr(
+        serving, fn, lambda spark, sf_dir, d: seen.append(d) or {"status": 0}
+    )
+    status, payload = _get(f"{ads_server}/{route}?date={date}")
+    assert (status, payload) == (200, {"status": 0})
+    assert seen == [serving_http._today()]
 
 
 def test_http_internal_error_is_logged_not_echoed(
