@@ -2955,17 +2955,16 @@ FROM v1 LEFT JOIN sem USING (doc_id)
 """
 
 
-@query("pipeline_corpus_curation_v2", oracle=CURATION_V2_ORACLE)
-def pipeline_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v1 curation + SemDeDup stage over the survivors. Scale shape: the
-    embedding assignment is the same broadcast argmax as the ANN index;
-    survivor restriction is two semi-joins BEFORE pair scoring, so the
-    quadratic-within-cluster work runs on the curated corpus only."""
-    from realtime_datawarehouse_spark.functions.vector import dot, l2_norm
+def _semdedup_stage(v1: DataFrame, assigned: DataFrame, key: str) -> DataFrame:
+    """The SemDeDup stage over v1's statuses: among v1 survivors, a
+    document whose embedding shares ``key`` (its cluster or bucket in
+    ``assigned``: vec_id, v, vn, key) with a smaller-id survivor at cosine
+    ≥ SEMDEDUP_COSINE becomes 'semantic_dup'. Survivor restriction is a
+    semi-join BEFORE pair scoring, so the quadratic-within-key work runs
+    on the curated corpus only."""
+    from realtime_datawarehouse_spark.functions.compare import pround
+    from realtime_datawarehouse_spark.functions.vector import dot
 
-    v1 = pipeline_corpus_curation(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    assigned = similarity.ivf_assign(emb)
     surv = v1.where(F.col("status") == "kept").select(
         F.col("doc_id").alias("sid")
     )
@@ -2982,20 +2981,16 @@ def pipeline_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # (r14 note: a SEM_PAIR_SALT salting of this self-join was prototyped
     # for the flat sf1 scaling and measured SLOWER once ivf_assign's
-    # narrow-scan rebalance landed — the pair key is centroid_id with
+    # narrow-scan rebalance landed — v2's pair key, centroid_id, has
     # |corpus|/61 distinct values, plenty of parallelism on its own; the
     # b-side replication only added shuffle. Rejected, see
     # OPTIMIZATION_r14.md.)
     a, b = sa.alias("a"), sa.alias("b")
-    cos = dot(F.col("a.v"), F.col("b.v")) / (
-        F.col("a.vn") * F.col("b.vn")
-    )
-    from realtime_datawarehouse_spark.functions.compare import pround
-
+    cos = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.vn") * F.col("b.vn"))
     sem = (
         a.join(
             b.hint("shuffle_hash"),
-            (F.col("a.centroid_id") == F.col("b.centroid_id"))
+            (F.col(f"a.{key}") == F.col(f"b.{key}"))
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .where(pround(cos, 4) >= similarity.SEMDEDUP_COSINE)
@@ -3011,6 +3006,16 @@ def pipeline_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("kept")
         .alias("status"),
     )
+
+
+@query("pipeline_corpus_curation_v2", oracle=CURATION_V2_ORACLE)
+def pipeline_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """v1 curation + SemDeDup stage over the survivors. Scale shape: the
+    embedding assignment is the same broadcast argmax as the ANN index;
+    the stage keys pairs by IVF centroid."""
+    v1 = pipeline_corpus_curation(spark, sf_dir)
+    assigned = similarity.ivf_assign(_emb(spark, sf_dir))
+    return _semdedup_stage(v1, assigned, "centroid_id")
 
 
 # v3: the semantic stage keyed by adaptive-plane LSH buckets instead of the
@@ -3050,43 +3055,9 @@ def pipeline_corpus_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     are held at a constant target by the plane count, and the pair stage
     runs on survivors only: the whole composed pipeline stays near-linear
     (measured 3.2× for 10× rows on the standalone stage, SCALE.md §12)."""
-    from realtime_datawarehouse_spark.functions.compare import pround
-    from realtime_datawarehouse_spark.functions.vector import dot
-
     v1 = pipeline_corpus_curation(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    assigned = similarity.sem_lsh_assign(emb)
-    surv = v1.where(F.col("status") == "kept").select(
-        F.col("doc_id").alias("sid")
-    )
-    # r14: one survivors-restricted assignment feeds both pair sides
-    # (same restructure as v2 — see pipeline_corpus_curation_v2)
-    sa = assigned.join(
-        surv.hint("shuffle_hash"),
-        F.col("vec_id") == F.col("sid"),
-        "left_semi",
-    )
-    a, b = sa.alias("a"), sa.alias("b")
-    cos = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.vn") * F.col("b.vn"))
-    sem = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.bucket_id") == F.col("b.bucket_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .where(pround(cos, 4) >= similarity.SEMDEDUP_COSINE)
-        .select(F.col("b.vec_id").alias("sem_id"))
-        .distinct()
-    )
-    return v1.join(
-        F.broadcast(sem), v1.doc_id == F.col("sem_id"), "left"
-    ).select(
-        "doc_id",
-        F.when(F.col("status") != "kept", F.col("status"))
-        .when(F.col("sem_id").isNotNull(), "semantic_dup")
-        .otherwise("kept")
-        .alias("status"),
-    )
+    assigned = similarity.sem_lsh_assign(_emb(spark, sf_dir))
+    return _semdedup_stage(v1, assigned, "bucket_id")
 
 
 CURATION_V4_ORACLE = f"""

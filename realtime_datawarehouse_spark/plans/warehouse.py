@@ -4,15 +4,17 @@
     ODS   raw envelopes/log lines     (topic_db / topic_log stand-ins)
     DIM   config-routed dim tables    (DimApp → Phoenix ⇒ parquet dims)
     DWD   cleaned fact tables         (cart_add, order_detail, page_log)
-    DWS   windowed/daily summaries    (cart UU, sku order, province amount)
-    ADS   serving aggregates          (gmv, per-province) over DWS
+    DWS   summaries                   (cart_uu, sku_order, trade_daily)
+    ADS   serving aggregates          (gmv) over DWS
 
 Every layer is written to ``<out_dir>/<layer>/<table>`` and re-READ by the
-next layer (process isolation exactly like the reference's Kafka topic
-boundaries — each hop is replayable, restartable, and independently
-scalable). In production each write is a Delta/Iceberg table (or a Kafka
-topic in parity mode) and each arrow is its own Structured Streaming query;
-the operator expressions are identical (streaming/pipelines.py).
+next layer, as the reference's jobs meet at Kafka topics.
+
+The stream topology (``streaming/pipelines.py``) builds its DWD
+boundaries with :func:`dwd_cart_add` and :func:`dwd_page_log`. It serves
+:func:`dws_cart_add_uu_daily`'s table through its own daily dedup and
+windows (``dropDuplicatesWithinWatermark`` rejects batch DataFrames);
+tests/test_streaming_pipelines.py pins both forms equal on one input.
 
 Every table a layer reads back is read with its schema as declared here
 (``_SCHEMAS``), never inferred: the paper's DWD jobs "declare fixed
@@ -39,7 +41,7 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
@@ -69,7 +71,7 @@ _SCHEMAS: dict[tuple[str, str], StructType | str] = {
     ),
     ("dwd", "cart_add"): (
         "id string, user_id string, sku_id string, sku_num_delta int, "
-        "change_type string"
+        "change_type string, event_time timestamp"
     ),
     ("dws", "trade_daily"): "dt date, order_amount double, order_uu_ct bigint",
 }
@@ -110,6 +112,44 @@ def _write_tables(
         f.result()
 
 
+def dwd_cart_add(env: DataFrame) -> DataFrame:
+    """DwdTradeCartAdd (rt/app/dwd/db/DwdTradeCartAdd.java): Maxwell
+    envelopes (``maxwell.MAXWELL_SCHEMA``) → ETL filter → ``cart_info``
+    rows → cart-add facts with quantity delta and ``event_time`` (the
+    epoch-seconds ``ts`` as a timestamp, the W4 seconds→timestamp fixup)."""
+    env = maxwell.etl_filter(env).where(F.col("table") == "cart_info")
+    return maxwell.cart_add_delta(
+        env.withColumn(
+            "event_time", F.timestamp_seconds(F.col("ts").cast("long"))
+        ),
+        extra_cols=("event_time",),
+    )
+
+
+def dwd_page_log(page: DataFrame) -> DataFrame:
+    """DwdTrafficBaseLogSplit's page topic as flat facts: the ``page``
+    branch of ``log_events.split_log`` → the device dimensions (mid, vc,
+    ch, ar, is_new), the page fields (page_id, last_page_id, during_time)
+    and the millisecond ``ts`` as ``event_time``."""
+    common = ("mid", "vc", "ch", "ar", "is_new")
+    fields = ("page_id", "last_page_id", "during_time")
+    return page.select(
+        *[F.col(f"common.{c}").alias(c) for c in common],
+        *[F.col(f"page.{c}").alias(c) for c in fields],
+        F.timestamp_millis(F.col("ts")).alias("event_time"),
+    )
+
+
+def dws_cart_add_uu_daily(cart: DataFrame) -> DataFrame:
+    """DwsTradeCartAddUuWindow read per day, over :func:`dwd_cart_add`
+    facts: the distinct cart-add users of each event day as ``(dt string,
+    cart_add_uu bigint)``, the columns the stream topology serves as
+    ``ads_cart_daily``."""
+    return cart.groupBy(
+        F.date_format("event_time", "yyyy-MM-dd").alias("dt")
+    ).agg(F.countDistinct("user_id").alias("cart_add_uu"))
+
+
 def build_ods(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """ODS: land the raw wire formats (envelope structs + raw JSON lines)."""
     _write_tables(spark, out_dir, "ods", {
@@ -139,10 +179,9 @@ def build_dwd(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     from the tolerant log split."""
 
     def cart_add() -> DataFrame:
-        # the envelope ts (epoch-seconds stand-in = orderkey here; real
-        # feeds carry true epochs) stays a plain column
-        env = _read(spark, out_dir, "ods", "topic_db_cart")
-        return maxwell.cart_add_delta(maxwell.etl_filter(env))
+        # the envelope ts is an epoch-seconds stand-in (orderkey here; real
+        # feeds carry true epochs), so event_time spans the first days of 1970
+        return dwd_cart_add(_read(spark, out_dir, "ods", "topic_db_cart"))
 
     def order_detail() -> DataFrame:
         # ``dt`` is a date column, the type DWS trade_daily groups by and
@@ -164,18 +203,10 @@ def build_dwd(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     raw = _read(spark, out_dir, "ods", "topic_log")
     clean, dirty = log_events.parse_with_dirty_routing(raw)
 
-    def page_log() -> DataFrame:
-        return log_events.split_log(clean)["page"].select(
-            F.col("common.mid").alias("mid"),
-            F.col("page.page_id").alias("page_id"),
-            F.col("page.during_time").alias("during_time"),
-            F.timestamp_millis(F.col("ts")).alias("ts"),
-        )
-
     _write_tables(spark, out_dir, "dwd", {
         "cart_add": cart_add,
         "order_detail": order_detail,
-        "page_log": page_log,
+        "page_log": lambda: dwd_page_log(log_events.split_log(clean)["page"]),
         "dirty": lambda: dirty,
     })
 
@@ -197,20 +228,12 @@ def build_dws(spark: SparkSession, out_dir: str) -> None:
             F.countDistinct("user_id").alias("order_uu_ct"),
         )
 
-    def cart_uu() -> DataFrame:
-        cart = _read(spark, out_dir, "dwd", "cart_add")
-        w = Window.partitionBy("user_id").orderBy("id")
-        return (
-            cart.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .groupBy()
-            .agg(F.count("*").alias("cart_uu_ct"))
-        )
-
     _write_tables(spark, out_dir, "dws", {
         "sku_order": sku_order,
         "trade_daily": trade_daily,
-        "cart_uu": cart_uu,
+        "cart_uu": lambda: dws_cart_add_uu_daily(
+            _read(spark, out_dir, "dwd", "cart_add")
+        ),
     })
 
 

@@ -23,28 +23,22 @@ from pyspark.sql import SparkSession
 
 from realtime_datawarehouse_spark.functions.compare import pround
 from realtime_datawarehouse_spark.operators import config_router, table_store
+from realtime_datawarehouse_spark.plans import warehouse
 from realtime_datawarehouse_spark.sources import log_events, maxwell
 from realtime_datawarehouse_spark.streaming import jobs
 
-
-def dwd_cart_add(raw: DataFrame) -> DataFrame:
-    """DwdTradeCartAdd (rt/app/dwd/db/DwdTradeCartAdd.java): topic_db →
-    Maxwell parse → ETL filter → ``cart_info`` rows → cart-add facts with
-    quantity delta and ``event_time`` (the epoch-seconds ``ts`` as a
-    timestamp, the W4 seconds→timestamp fixup)."""
-    env = maxwell.etl_filter(maxwell.parse_envelope(raw)).where(
-        F.col("table") == "cart_info"
-    )
-    return maxwell.cart_add_delta(
-        env.withColumn(
-            "event_time", F.timestamp_seconds(F.col("ts").cast("long"))
-        ),
-        extra_cols=("event_time",),
-    )
+# The reference DWS jobs' tumbling window, and DwsTradeSkuOrderWindow's
+# own window and order_detail ⋈ order_info join band.
+DWS_WINDOW = "10 seconds"
+SKU_ORDER_WINDOW = "10 minutes"
+SKU_ORDER_BAND = "200 days"
 
 
 def _cart_add_uu_windows(facts: DataFrame) -> DataFrame:
-    """First cart-add fact per user per day → 10 s tumble UU count.
+    """DwsTradeCartAddUuWindow (rt/app/dws/DwsTradeCartAddUuWindow.java:
+    76-139) over ``warehouse.dwd_cart_add`` facts: first cart-add fact per
+    user per day → 10 s tumble UU count. Only cart-add facts count, as in
+    the reference job, which reads the dwd_trade_cart_add topic.
 
     The watermark is the day-TTL delay: the daily dedup needs ≥ 24h of
     state retention to be exact AND leak-free (see jobs.first_per_user_day),
@@ -58,7 +52,7 @@ def _cart_add_uu_windows(facts: DataFrame) -> DataFrame:
         watermark=jobs.DAY_TTL_WATERMARK,
     )
     return (
-        firsts.groupBy(F.window("event_time", "10 seconds"))
+        firsts.groupBy(F.window("event_time", DWS_WINDOW))
         .agg(F.count("*").alias("cart_add_uu_ct"))
         .select(
             F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
@@ -68,22 +62,10 @@ def _cart_add_uu_windows(facts: DataFrame) -> DataFrame:
     )
 
 
-def dws_cart_add_uu_window(raw: DataFrame) -> DataFrame:
-    """DwsTradeCartAddUuWindow (rt/app/dws/DwsTradeCartAddUuWindow.java:76-139):
-    topic_db → :func:`dwd_cart_add` facts → first fact per user per day →
-    10 s tumble count. Only cart-add facts count, as in the reference job,
-    which reads the dwd_trade_cart_add topic: rows of other tables and
-    cart updates that do not raise ``sku_num`` are not cart adds."""
-    return _cart_add_uu_windows(dwd_cart_add(raw))
-
-
 def dws_sku_order_window(
     order_detail: DataFrame,
     order_info: DataFrame,
     sku_dim: DataFrame,
-    band: str = "200 days",
-    window: str = "10 minutes",
-    watermark: str = jobs.DEFAULT_WATERMARK,
 ) -> DataFrame:
     """DwsTradeSkuOrderWindow (rt/app/dws/DwsTradeSkuOrderWindow.java), the
     reference's most complex job, as one streaming graph:
@@ -104,12 +86,12 @@ def dws_sku_order_window(
         left_ts="detail_ts",
         right_ts="order_ts",
         on=(F.col("order_id") == F.col("oi_order_id")),
-        band=band,
-        watermark=watermark,
+        band=SKU_ORDER_BAND,
+        watermark=jobs.DEFAULT_WATERMARK,
     )
     enriched = joined.join(F.broadcast(sku_dim), on="sku_id")
     return (
-        enriched.groupBy(F.window("detail_ts", window), F.col("brand"))
+        enriched.groupBy(F.window("detail_ts", SKU_ORDER_WINDOW), "brand")
         .agg(
             F.count("*").alias("order_ct"),
             F.sum("amount").alias("order_amount"),
@@ -135,9 +117,7 @@ def dwd_log_split(raw: DataFrame) -> dict[str, DataFrame]:
     return out
 
 
-def dws_keyword_window(
-    raw: DataFrame, watermark: str = jobs.DEFAULT_WATERMARK
-) -> DataFrame:
+def dws_keyword_window(raw: DataFrame) -> DataFrame:
     """DwsTrafficSourceKeywordPageViewWindow (…:21-83): page stream →
     search-entry filter → tokenize+explode (U1) → 10 s tumble count."""
     clean, _ = log_events.parse_with_dirty_routing(raw)
@@ -158,8 +138,8 @@ def dws_keyword_window(
         "event_time",
     )
     return (
-        words.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", "10 seconds"), "keyword")
+        words.withWatermark("event_time", jobs.DEFAULT_WATERMARK)
+        .groupBy(F.window("event_time", DWS_WINDOW), "keyword")
         .agg(F.count("*").alias("keyword_count"))
         .select(
             F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
@@ -2075,40 +2055,31 @@ def dwd_unique_visitor_detail(page: DataFrame) -> DataFrame:
     .java:30-70): session-entry pages only (last_page_id null), then the
     first page view per (mid, day) survives.
 
+    ``page`` is the flat ``warehouse.dwd_page_log`` boundary.
     Spark form: ``dropDuplicatesWithinWatermark`` on (mid, visit_date) with
     a ≥24 h delay — exact daily dedup with state evicted one day after the
     day closes (the reference's 1-day state TTL, W7). Emits in arrival
     order within a day, which equals min-ts order for time-ordered sources
     (jobs.first_per_user_day contract note).
     """
-    entry = page.where(F.col("page.last_page_id").isNull())
-    uv = entry.select(
-        F.col("common.mid").alias("mid"),
-        F.col("common.vc").alias("vc"),
-        F.col("common.ch").alias("ch"),
-        F.col("common.ar").alias("ar"),
-        F.col("common.is_new").alias("is_new"),
-        F.timestamp_millis(F.col("ts")).alias("event_time"),
-        F.to_date(F.timestamp_millis(F.col("ts"))).alias("visit_date"),
+    uv = page.where(F.col("last_page_id").isNull()).select(
+        "mid", "vc", "ch", "ar", "is_new", "event_time",
+        F.to_date("event_time").alias("visit_date"),
     )
     return uv.withWatermark(
         "event_time", jobs.DAY_TTL_WATERMARK
     ).dropDuplicatesWithinWatermark(["mid", "visit_date"])
 
 
-def dws_traffic_channel_window(
-    uv: DataFrame,
-    window: str = "10 seconds",
-    watermark: str = jobs.DEFAULT_WATERMARK,
-) -> DataFrame:
+def dws_traffic_channel_window(uv: DataFrame) -> DataFrame:
     """DwsTrafficVcChArIsNewPageViewWindow (rt/app/dws/…VcChArIsNew…java:
     40-100) over the UV boundary: tumbling UV count per (vc, ch, ar,
     is_new) dimension combination. Append output — a window row emits once
     the watermark closes it."""
     return (
-        uv.withWatermark("event_time", watermark)
+        uv.withWatermark("event_time", jobs.DEFAULT_WATERMARK)
         .groupBy(
-            F.window("event_time", window), "vc", "ch", "ar", "is_new"
+            F.window("event_time", DWS_WINDOW), "vc", "ch", "ar", "is_new"
         )
         .agg(F.count("*").alias("uv_ct"))
         .select(
@@ -2205,7 +2176,8 @@ def traffic_stream_graph(
     """The §3.4 traffic dataflow as one running set of THREE chained
     streaming queries over shared storage boundaries:
 
-      raw (topic_log) ── q1: dwd_log_split → page branch
+      raw (topic_log) ── q1: dwd_log_split → page branch →
+        warehouse.dwd_page_log (flat page facts)
         → ``{work_dir}/dwd_traffic_page_log``   (append boundary)
       boundary ── q2: dwd_unique_visitor_detail
         → ``{work_dir}/dwd_traffic_uv``         (append boundary)
@@ -2225,8 +2197,8 @@ def traffic_stream_graph(
     """
     store_path = store_path or os.path.join(work_dir, "dws_traffic_channel")
     q1, page = _boundary(
-        dwd_log_split(raw)["page"], work_dir, "dwd_traffic_page_log", 1,
-        in_order=True,
+        warehouse.dwd_page_log(dwd_log_split(raw)["page"]),
+        work_dir, "dwd_traffic_page_log", 1, in_order=True,
     )
     q2, uv = _boundary(
         dwd_unique_visitor_detail(page), work_dir, "dwd_traffic_uv", 2
@@ -2254,10 +2226,10 @@ def trade_stream_graph(
     streaming queries over shared storage boundaries (the right-column
     twin of ``traffic_stream_graph``):
 
-      raw (topic_db) ── q1: dwd_cart_add (cart-add facts with quantity
-        delta + event time)
+      raw (topic_db) ── q1: Maxwell parse → warehouse.dwd_cart_add
+        (cart-add facts with quantity delta + event time)
         → ``{work_dir}/dwd_cart_add``        (append boundary)
-      boundary ── q2: the dws_cart_add_uu_window body (first-per-user-day
+      boundary ── q2: DwsTradeCartAddUuWindow (first-per-user-day
         dedup → 10 s tumble UU window)
         → ``{work_dir}/dws_cart_uu``         (append boundary)
       boundary ── q3: ADS daily rollup, foreachBatch MERGE into the
@@ -2275,7 +2247,8 @@ def trade_stream_graph(
     """
     store_path = store_path or os.path.join(work_dir, "ads_cart_daily")
     q1, facts = _boundary(
-        dwd_cart_add(raw), work_dir, "dwd_cart_add", 1, in_order=True
+        warehouse.dwd_cart_add(maxwell.parse_envelope(raw)),
+        work_dir, "dwd_cart_add", 1, in_order=True,
     )
     q2, uu = _boundary(_cart_add_uu_windows(facts), work_dir, "dws_cart_uu", 2)
     daily = (

@@ -8,6 +8,8 @@ import shutil
 
 import pytest
 
+from realtime_datawarehouse_spark.plans import warehouse
+from realtime_datawarehouse_spark.sources import maxwell
 from realtime_datawarehouse_spark.streaming import jobs, pipelines
 
 
@@ -82,12 +84,20 @@ CART_HEARTBEATS = [
 ]
 
 
+def _cart_uu_windows(raw):
+    """DwsTradeCartAddUuWindow over raw topic_db lines, composed as the
+    trade column's first two hops compose it."""
+    return pipelines._cart_add_uu_windows(
+        warehouse.dwd_cart_add(maxwell.parse_envelope(raw))
+    )
+
+
 def test_cart_add_uu_pipeline(spark, tmp_path):
     raw = _stream_of_lines(
         spark, tmp_path, [CART_LINES_B1, CART_LINES_B2] + CART_HEARTBEATS
     )
     q = jobs.run_to_memory(
-        pipelines.dws_cart_add_uu_window(raw), "t_cart_uu", "append"
+        _cart_uu_windows(raw), "t_cart_uu", "append"
     )
     q.awaitTermination()
     rows = spark.table("t_cart_uu").collect()
@@ -115,7 +125,7 @@ def test_cart_add_uu_counts_only_cart_add_facts(spark, tmp_path):
         spark, tmp_path, [CART_LINES_B1 + CART_NOT_ADDS] + CART_HEARTBEATS
     )
     q = jobs.run_to_memory(
-        pipelines.dws_cart_add_uu_window(raw), "t_cart_uu_facts", "append"
+        _cart_uu_windows(raw), "t_cart_uu_facts", "append"
     )
     q.awaitTermination()
     by_stt = {
@@ -659,7 +669,8 @@ def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
     and trade columns running CONCURRENTLY as six checkpointed streaming
     queries in one run, both columns' DWS/ADS outputs MERGE-upserted into
     the SAME versioned table store root, with batch parity asserted at
-    both served tables."""
+    both served tables, and the warehouse's batch functions equal to both
+    DWD boundaries and the served cart-UU days."""
     from realtime_datawarehouse_spark.operators import table_store as ts
 
     log_raw = _stream_of_lines(
@@ -719,6 +730,33 @@ def test_full_stream_topology_both_columns_shared_store(spark, tmp_path):
     assert trade_served["2024-01-01"] == trade_want["2024-01-01"] == 3
     for dt, uu in trade_served.items():
         assert uu <= trade_want[dt]
+
+    # --- one definition: the batch functions over the same lines equal
+    # both DWD boundaries, and the served ADS table on the day the
+    # heartbeats closed
+    from pyspark.sql import functions as F
+
+    from realtime_datawarehouse_spark.sources import log_events
+
+    def lines(values):
+        return spark.createDataFrame([(v,) for v in values], "value string")
+
+    clean, _ = log_events.parse_with_dirty_routing(lines(all_lines))
+    page_log = warehouse.dwd_page_log(log_events.split_log(clean)["page"])
+    cart_add = warehouse.dwd_cart_add(maxwell.parse_envelope(lines(all_db)))
+    closed = F.col("dt") == "2024-01-01"
+    work = tmp_path / "work"
+    for batch, streamed in (
+        (page_log, spark.read.parquet(f"{work}/traffic/dwd_traffic_page_log")),
+        (cart_add, spark.read.parquet(f"{work}/trade/dwd_cart_add")),
+        (
+            warehouse.dws_cart_add_uu_daily(cart_add).where(closed),
+            ts.read_state(spark, f"{store}/ads_cart_daily").where(closed),
+        ),
+    ):
+        streamed = streamed.select(batch.columns)
+        assert batch.exceptAll(streamed).isEmpty()
+        assert streamed.exceptAll(batch).isEmpty()
 
 
 def test_full_stream_topology_restarts_from_checkpoints(spark, tmp_path):

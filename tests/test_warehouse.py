@@ -45,6 +45,27 @@ def test_layered_pipeline_end_to_end(spark, duck, tmp_path):
     ).fetchone()[0]
     assert cart_ct == exp_cart
 
+    # DWS cart_uu: distinct cart-add users (l_suppkey) per event day, the
+    # envelope ts being l_orderkey epoch seconds, as DuckDB counts them
+    got = {
+        r.dt: r.cart_add_uu
+        for r in spark.read.parquet(paths["dws/cart_uu"]).collect()
+    }
+    exp = dict(
+        duck.execute(
+            """SELECT strftime(DATE '1970-01-01'
+                               + CAST(l_orderkey // 86400 AS INTEGER),
+                               '%Y-%m-%d'),
+                      count(DISTINCT l_suppkey)
+               FROM lineitem
+               WHERE l_linenumber <> 7
+                 AND (l_returnflag = 'A'
+                      OR (l_returnflag = 'R' AND l_linenumber % 3 = 2))
+               GROUP BY 1"""
+        ).fetchall()
+    )
+    assert exp and got == exp
+
     # DWD order_detail is one unpartitioned table: dt is a column spanning
     # more dates than the table has data files, and its per-dt amounts
     # equal DuckDB's straight off the fixtures

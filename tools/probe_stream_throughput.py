@@ -26,8 +26,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
+from realtime_datawarehouse_spark.session import build_session  # noqa: E402
 from realtime_datawarehouse_spark.streaming import pipelines  # noqa: E402
 
 BASE_TS = 1704067200000  # 2024-01-01T00:00Z
@@ -72,12 +73,7 @@ def drain(qs) -> None:
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
+    spark = build_session(app_name="probe_stream_throughput")
     spark.sparkContext.setLogLevel("ERROR")
     out = {}
     work = tempfile.mkdtemp(prefix="probe_stream_")
